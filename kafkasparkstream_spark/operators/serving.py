@@ -9,9 +9,7 @@ filters push down into the parquet scan.
 
 Scale notes: ``latest_readings`` is ORDER BY ts DESC LIMIT k — Spark plans
 ``TakeOrderedAndProject`` (per-partition top-k, then a k-row merge on the
-driver), so it never performs a full sort/shuffle of the fact table. Time-range
-filters prune date partitions when the sink table is written partitioned by
-date (see streaming.sinks).
+driver), so it never performs a full sort/shuffle of the fact table.
 """
 
 from __future__ import annotations

@@ -15,13 +15,15 @@ from pyspark.sql.types import (  # noqa: E402
     StructType,
 )
 import atexit  # noqa: E402
-import contextlib  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
 import tempfile  # noqa: E402
 import time  # noqa: E402
 from kafkasparkstream_spark.queries._shared import (  # noqa: E402
     register,
+)
+from kafkasparkstream_spark.streaming.pipeline import (  # noqa: E402
+    clamped_shuffle_partitions,
 )
 
 EVENT_WIRE_SCHEMA = StructType(
@@ -79,34 +81,6 @@ def _stream_workdir(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     _STREAM_WORKDIRS.append(d)
     return d
-
-
-@contextlib.contextmanager
-def _clamped_shuffle_partitions(spark: SparkSession, cap: int = 8, rows: int | None = None):
-    """Pin the state-store count for a bounded streaming replay (the count
-    is frozen into the fresh checkpoint at first start); restore the
-    session value after. Production sizes this to cluster capacity BEFORE
-    the first start — it cannot change without a state rebuild.
-
-    ``rows``: pass the replay's row count ONLY for Python-stateful
-    replays (``applyInPandasWithState`` / ``transformWithStateInPandas``):
-    there the per-partition Arrow+Python loop is the bottleneck, and a
-    large replay (``rows`` ≥ 200k) keeps the session's full shuffle width
-    (streaming_running_totals at sf1.0: 23 s → 12 s on local[32]).
-    JVM-state replays (windowed aggs, dedup, stream-stream joins) must
-    NOT pass it: their cost is per-provider state commits × batches, and
-    widening the store makes them SLOWER — measured at sf1.0, cap 8 vs
-    session-32: left-outer join 5.4 s vs 12.5 s, interval join 4.4 vs
-    10.6, chained windows 3.4 vs 5.6, upsert 2.7 vs 4.3 (stream-stream
-    joins keep FOUR stores per partition, so provider overhead scales
-    worst there)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    eff = int(old) if (rows is not None and rows >= 200_000) else min(int(old), cap)
-    spark.conf.set("spark.sql.shuffle.partitions", str(eff))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _drain_sink(spark, q, sink: str, n_rows: int, timeout_s: float = 120.0) -> bool:
@@ -236,10 +210,9 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema=EVENT_WIRE_SCHEMA,
     )
     raw = file_json_stream(spark, src, max_files_per_trigger=None)
-    with _clamped_shuffle_partitions(spark):
-        agg_q, raw_q = start_pipeline(raw, sink, ckpt, cfg, available_now=True)
-        agg_q.awaitTermination()
-        raw_q.awaitTermination()
+    agg_q, raw_q = start_pipeline(raw, sink, ckpt, cfg, available_now=True)
+    agg_q.awaitTermination()
+    raw_q.awaitTermination()
 
     final = latest_state(
         spark.read.parquet(f"{sink}/sensor_aggregates"),
@@ -312,7 +285,7 @@ def streaming_upsert_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = file_json_stream(spark, src, max_files_per_trigger=None)
     keys = ("window_start", "window_end", "event_type")
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             windowed_aggregate_stage(parse_stage(raw, cfg), cfg)
             # swallow_errors=False: ST7 isolation is right for the
@@ -382,8 +355,8 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fresh checkpoint per run. Unlike the JVM-state replays, this one
     # passes rows= so a large replay keeps the session's full shuffle
     # width: applyInPandasWithState is Arrow/Python-throughput-bound per
-    # partition (see _clamped_shuffle_partitions).
-    with _clamped_shuffle_partitions(spark, rows=events.count()):
+    # partition (see clamped_shuffle_partitions).
+    with clamped_shuffle_partitions(spark, rows=events.count()):
         q = (
             totals.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("update")
@@ -457,7 +430,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sink, ckpt = f"{workdir}/sink", f"{workdir}/ckpt"
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             pairs.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("append")
@@ -547,7 +520,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             sessions.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("append")
@@ -629,7 +602,7 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w5.start").alias("window_start"), "n_events", "_sum_c")
     )
 
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             coarse.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("append")
@@ -707,7 +680,7 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("category", "value", "weight")
     )
 
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             enriched.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("append")
@@ -764,7 +737,7 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = PipelineConfig(ts_col="ts")
     deduped = dedup_stage(parsed, keys=("event_id", "ts"), cfg=cfg)
 
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             deduped.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("append")
@@ -856,7 +829,7 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sink, ckpt = f"{workdir}/sink", f"{workdir}/ckpt"
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             pairs.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("append")
@@ -923,10 +896,9 @@ def streaming_batch_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema=EVENT_WIRE_SCHEMA,
     )
     raw = file_json_stream(spark, src, max_files_per_trigger=None)
-    with _clamped_shuffle_partitions(spark):
-        agg_q, raw_q = start_pipeline(raw, sink, ckpt, cfg, available_now=True)
-        agg_q.awaitTermination()
-        raw_q.awaitTermination()
+    agg_q, raw_q = start_pipeline(raw, sink, ckpt, cfg, available_now=True)
+    agg_q.awaitTermination()
+    raw_q.awaitTermination()
 
     streamed = latest_state(
         spark.read.parquet(f"{sink}/sensor_aggregates"),

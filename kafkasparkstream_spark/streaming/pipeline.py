@@ -12,14 +12,19 @@ Spark-first re-expression of the reference's streaming job
 - S5   awaitAnyTermination (processor.py:122)
 
 Scale notes: the streaming aggregate's state is partitioned by the group key
-(window × dims) across ``spark.sql.shuffle.partitions`` state stores; the
-1-minute watermark bounds state to ~2 windows × |dim combinations| entries
-regardless of throughput. Raw passthrough has no state at all. On a 1000-node
+(window × dims) across as many state stores as the cluster has cores, at most
+:data:`STATE_STORE_CAP`, pinned by :func:`start_pipeline` into each fresh
+checkpoint; the 1-minute watermark bounds state to ~2
+windows × |dim combinations| entries regardless of throughput. Every trigger
+loads and commits every store, so the count, not the row volume, sets a
+small trigger's cost. Raw passthrough has no state at all. On a 1000-node
 cluster the only cross-executor traffic is the partial-agg exchange.
 """
 
 from __future__ import annotations
 
+import contextlib
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +46,53 @@ class PipelineConfig:
     value_col: str = "value"
     battery_col: str | None = "battery_level"
     schema: StructType = field(default_factory=lambda: SENSOR_READING_SCHEMA)
+
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+#: Most state stores a JVM-state query gets. Its trigger cost is per-store
+#: loads and commits, so more stores than this only add overhead: measured
+#: at sf1.0 on local[32], 8 stores against 32 ran chained windows in 3.4 s
+#: against 5.6 s and the upsert aggregate in 2.7 s against 4.3 s
+#: (SCALING.md, "State-store width").
+STATE_STORE_CAP = 8
+
+
+@contextlib.contextmanager
+def pinned_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Set the session's shuffle-partition count to ``n`` inside the block
+    and restore it after. A streaming query started inside the block freezes
+    ``n`` into its fresh checkpoint as its state-store count; a restart on an
+    existing checkpoint keeps the frozen count whatever the session says, so
+    production sizes it to cluster capacity BEFORE the first start."""
+    old = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, old)
+
+
+def clamped_shuffle_partitions(spark: SparkSession, rows: int | None = None):
+    """:func:`pinned_shuffle_partitions` for a bounded registry replay that
+    starts its own queries: the session's shuffle-partition count, capped
+    at :data:`STATE_STORE_CAP`.
+
+    ``rows``: pass the replay's row count ONLY for Python-stateful
+    replays (``applyInPandasWithState`` / ``transformWithStateInPandas``):
+    there the per-partition Arrow+Python loop is the bottleneck, and a
+    large replay (``rows`` ≥ 200k) keeps the session's full shuffle width
+    (streaming_running_totals at sf1.0: 23 s → 12 s on local[32]).
+    JVM-state replays (windowed aggs, dedup, stream-stream joins) must
+    NOT pass it: their cost is per-provider state commits × batches, and
+    widening the store makes them SLOWER — measured at sf1.0, cap 8 vs
+    session-32: left-outer join 5.4 s vs 12.5 s, interval join 4.4 vs
+    10.6, chained windows 3.4 vs 5.6, upsert 2.7 vs 4.3 (stream-stream
+    joins keep FOUR stores per partition, so provider overhead scales
+    worst there)."""
+    session = int(spark.conf.get(SHUFFLE_PARTITIONS))
+    n = session if (rows is not None and rows >= 200_000) else min(session, STATE_STORE_CAP)
+    return pinned_shuffle_partitions(spark, n)
 
 
 def parse_stage(raw: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -103,6 +155,11 @@ def start_pipeline(
     each via foreachBatch with its own checkpoint dir. ``available_now=True``
     processes all available input then stops (deterministic tests/backfills).
 
+    Both queries start under the cluster's parallelism capped at
+    :data:`STATE_STORE_CAP` as their shuffle-partition count, rather than
+    the session's count, which is restored once they have started; a
+    restart keeps the count its checkpoint froze.
+
     ``dedup_keys`` inserts :func:`dedup_stage` ahead of both branches,
     dropping source re-deliveries of the same logical event. Opt-in (not
     default) because the stateful dedup operator also discards
@@ -131,8 +188,11 @@ def start_pipeline(
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
-    agg_q = _start(agg, "sensor_aggregates", "update")
-    raw_q = _start(parsed, "sensor_data", "append")
+    spark = raw_stream.sparkSession
+    n = min(spark.sparkContext.defaultParallelism, STATE_STORE_CAP)
+    with pinned_shuffle_partitions(spark, n):
+        agg_q = _start(agg, "sensor_aggregates", "update")
+        raw_q = _start(parsed, "sensor_data", "append")
     return agg_q, raw_q
 
 

@@ -14,8 +14,12 @@ same callback body becomes a Delta/Iceberg MERGE keyed on (window, dims).
 
 Scale notes: each micro-batch write is a plain distributed parquet append
 (one file per partition, no driver collect). ``skip_empty`` avoids the
-empty-batch file churn. Errors isolate per batch (logged, stream continues)
-exactly like the reference — surface metrics instead of dying.
+empty-batch file churn. Every sink runs its batch through :func:`_batch_sink`,
+which persists the batch around the empty probe and the write: unpersisted,
+each action would re-execute the micro-batch plan — the stateful aggregate
+and its state-store loads and commits included. Errors isolate per batch
+(logged, stream continues) exactly like the reference — surface metrics
+instead of dying.
 """
 
 from __future__ import annotations
@@ -28,44 +32,63 @@ from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
+BatchSink = Callable[[DataFrame, int], None]
+
+
+def _batch_sink(
+    write: BatchSink, target: str, skip_empty: bool, swallow_errors: bool
+) -> BatchSink:
+    """The shared foreachBatch scaffolding (processor.py:124-140): persist
+    the batch, skip it if empty (ST8), ``write`` it, isolate a failure
+    (ST7: logged, or raised with ``swallow_errors=False``), unpersist.
+
+    The persist makes the micro-batch plan run once per batch however many
+    actions the write takes; the empty probe then only fills the first
+    cached partition, which the write reuses."""
+
+    def _run(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = batch_df.persist()
+        try:
+            if skip_empty and batch_df.isEmpty():  # ST8 (processor.py:127)
+                log.info("batch %s empty, skipping %s", batch_id, target)
+                return
+            write(batch_df, batch_id)
+        except Exception:  # noqa: BLE001 — ST7 (processor.py:139-140)
+            if not swallow_errors:
+                raise
+            log.exception("batch %s write to %s failed (isolated)", batch_id, target)
+        finally:
+            batch_df.unpersist()
+
+    return _run
+
 
 def foreach_batch_parquet_sink(
     path: str,
     skip_empty: bool = True,
     swallow_errors: bool = True,
-) -> Callable[[DataFrame, int], None]:
+) -> BatchSink:
     """Micro-batch callback writing to a parquet table partitioned by the
     batch id (processor.py:124-140 analog).
 
     **Write idempotence (exceeds the reference's at-least-once contract):**
-    each batch lands in its own ``_batch_id=N`` partition via dynamic
-    partition overwrite, so a RETRIED micro-batch (checkpoint replay after a
-    crash between sink write and offset commit) replaces its own partition
-    instead of double-appending — the reference duplicates in that window
+    each batch overwrites its own ``_batch_id=N`` partition directory, so a
+    RETRIED micro-batch (checkpoint replay after a crash between sink write
+    and offset commit) replaces its own partition instead of
+    double-appending — the reference duplicates in that window
     (processor.py:133). Reads of ``path`` see ``_batch_id`` as a partition
     column; update-mode streams additionally resolve refinements with
     :func:`latest_state`."""
+    import os
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            if skip_empty and batch_df.isEmpty():  # ST8 (processor.py:127)
-                log.info("batch %s empty, skipping %s", batch_id, path)
-                return
-            (
-                batch_df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                # dynamic: only the partitions present in this batch (exactly
-                # one: _batch_id=N) are replaced; earlier batches untouched.
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-        except Exception:  # noqa: BLE001 — ST7 (processor.py:139-140)
-            if not swallow_errors:
-                raise
-            log.exception("batch %s write to %s failed (isolated)", batch_id, path)
+        # The batch id goes in the directory name, not in a literal column
+        # with partitionBy: the literal would differ per batch, so Spark's
+        # codegen cache would miss and compile two more classes for every
+        # batch, each warmed by the JIT from scratch.
+        batch_df.write.mode("overwrite").parquet(os.path.join(path, f"_batch_id={batch_id}"))
 
-    return _write
+    return _batch_sink(_write, path, skip_empty, swallow_errors)
 
 
 def latest_state(df: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:
@@ -89,7 +112,7 @@ def foreach_batch_jdbc_sink(
     properties: dict[str, str] | None = None,
     skip_empty: bool = True,
     swallow_errors: bool = True,
-) -> Callable[[DataFrame, int], None]:
+) -> BatchSink:
     """Micro-batch callback appending to a JDBC table — the reference's
     actual sink (S3, processor.py:124-140: ``batch_df.write.jdbc(url, table,
     mode="append", properties)`` behind an empty-batch skip and a
@@ -104,17 +127,9 @@ def foreach_batch_jdbc_sink(
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            if skip_empty and batch_df.isEmpty():  # ST8 (processor.py:127)
-                log.info("batch %s empty, skipping jdbc %s", batch_id, table)
-                return
-            batch_df.write.jdbc(url, table, mode="append", properties=properties or {})
-        except Exception:  # noqa: BLE001 — ST7 (processor.py:139-140)
-            if not swallow_errors:
-                raise
-            log.exception("batch %s jdbc write to %s failed (isolated)", batch_id, table)
+        batch_df.write.jdbc(url, table, mode="append", properties=properties or {})
 
-    return _write
+    return _batch_sink(_write, f"jdbc {table}", skip_empty, swallow_errors)
 
 
 def foreach_batch_upsert_sink(
@@ -123,7 +138,7 @@ def foreach_batch_upsert_sink(
     num_buckets: int = 16,
     skip_empty: bool = True,
     swallow_errors: bool = True,
-) -> Callable[[DataFrame, int], None]:
+) -> BatchSink:
     """Upsert-capable micro-batch sink: a key's refinement REPLACES its
     stored row, so the table itself is duplicate-free — ST3's production
     fix (SURVEY.md §2.9-ST3) as a storage property instead of the
@@ -168,79 +183,66 @@ def foreach_batch_upsert_sink(
         return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets))
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        # The merge takes FOUR actions on batch_df (isEmpty, affected-bucket
-        # collect, anti-join probe, final write); without a persist each one
-        # re-executes the upstream micro-batch plan — the stateful windowed
-        # aggregate, in the registry replay — on the sink hot path.
-        batch_df = batch_df.persist()
+        # Three actions (affected-bucket collect, anti-join probe, final
+        # write) share the batch that _batch_sink persisted.
+        spark = batch_df.sparkSession
+        man_path = os.path.join(path, "_manifest.json")
         try:
-            if skip_empty and batch_df.isEmpty():  # ST8
-                log.info("batch %s empty, skipping upsert %s", batch_id, path)
-                return
-            spark = batch_df.sparkSession
-            man_path = os.path.join(path, "_manifest.json")
-            try:
-                with open(man_path) as f:
-                    manifest = json.load(f)
-            except (OSError, ValueError):
-                manifest = {"buckets": {}, "schema": None}
+            with open(man_path) as f:
+                manifest = json.load(f)
+        except (OSError, ValueError):
+            manifest = {"buckets": {}, "schema": None}
 
-            if manifest["schema"] is not None:
-                # Schema-on-write enforcement (the lakehouse contract): a
-                # batch whose columns drift from the table would otherwise
-                # land silently in fresh buckets and poison the manifest.
-                from pyspark.sql.types import StructType
+        if manifest["schema"] is not None:
+            # Schema-on-write enforcement (the lakehouse contract): a
+            # batch whose columns drift from the table would otherwise
+            # land silently in fresh buckets and poison the manifest.
+            from pyspark.sql.types import StructType
 
-                stored = StructType.fromJson(json.loads(manifest["schema"]))
-                sig = lambda st: [(f.name, f.dataType.simpleString()) for f in st]  # noqa: E731
-                if sig(batch_df.schema) != sig(stored):
-                    raise ValueError(
-                        f"upsert schema mismatch at {path}: batch "
-                        f"{sig(batch_df.schema)} != table {sig(stored)}"
-                    )
-            new = batch_df.withColumn("_kb", _bucket(batch_df))
-            affected = sorted(
-                r["_kb"] for r in new.select("_kb").distinct().collect()
-            )
-            # Never rewrite a dir the manifest references (crash safety +
-            # no read-from-overwritten-path): replays of an already-swapped
-            # batch take the next attempt suffix.
-            referenced = set(manifest["buckets"].values())
-            ver, attempt = f"v{batch_id}", 0
-            while ver in referenced:
-                attempt += 1
-                ver = f"v{batch_id}a{attempt}"
-            old_dirs = {
-                b: os.path.join(path, "data", manifest["buckets"][str(b)], f"_kb={b}")
-                for b in affected
-                if str(b) in manifest["buckets"]
-            }
-            merged = new
-            if old_dirs:
-                old = spark.read.schema(batch_df.schema).parquet(*old_dirs.values())
-                keep = old.join(new.select(*keys).distinct(), keys, "left_anti")
-                merged = keep.withColumn("_kb", _bucket(keep)).unionByName(new)
-            (
-                merged.repartition("_kb")
-                .write.mode("overwrite")
-                .partitionBy("_kb")
-                .parquet(os.path.join(path, "data", ver))
-            )
-            for b in affected:
-                manifest["buckets"][str(b)] = ver
-            manifest["schema"] = batch_df.schema.json()
-            tmp = man_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, man_path)  # atomic: readers see old or new, never mixed
-        except Exception:  # noqa: BLE001 — ST7
-            if not swallow_errors:
-                raise
-            log.exception("batch %s upsert to %s failed (isolated)", batch_id, path)
-        finally:
-            batch_df.unpersist()
+            stored = StructType.fromJson(json.loads(manifest["schema"]))
+            sig = lambda st: [(f.name, f.dataType.simpleString()) for f in st]  # noqa: E731
+            if sig(batch_df.schema) != sig(stored):
+                raise ValueError(
+                    f"upsert schema mismatch at {path}: batch "
+                    f"{sig(batch_df.schema)} != table {sig(stored)}"
+                )
+        new = batch_df.withColumn("_kb", _bucket(batch_df))
+        affected = sorted(
+            r["_kb"] for r in new.select("_kb").distinct().collect()
+        )
+        # Never rewrite a dir the manifest references (crash safety +
+        # no read-from-overwritten-path): replays of an already-swapped
+        # batch take the next attempt suffix.
+        referenced = set(manifest["buckets"].values())
+        ver, attempt = f"v{batch_id}", 0
+        while ver in referenced:
+            attempt += 1
+            ver = f"v{batch_id}a{attempt}"
+        old_dirs = {
+            b: os.path.join(path, "data", manifest["buckets"][str(b)], f"_kb={b}")
+            for b in affected
+            if str(b) in manifest["buckets"]
+        }
+        merged = new
+        if old_dirs:
+            old = spark.read.schema(batch_df.schema).parquet(*old_dirs.values())
+            keep = old.join(new.select(*keys).distinct(), keys, "left_anti")
+            merged = keep.withColumn("_kb", _bucket(keep)).unionByName(new)
+        (
+            merged.repartition("_kb")
+            .write.mode("overwrite")
+            .partitionBy("_kb")
+            .parquet(os.path.join(path, "data", ver))
+        )
+        for b in affected:
+            manifest["buckets"][str(b)] = ver
+        manifest["schema"] = batch_df.schema.json()
+        tmp = man_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, man_path)  # atomic: readers see old or new, never mixed
 
-    return _write
+    return _batch_sink(_write, f"upsert {path}", skip_empty, swallow_errors)
 
 
 def read_upsert_table(spark, path: str, schema: "StructType | str | None" = None) -> DataFrame:

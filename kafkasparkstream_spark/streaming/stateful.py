@@ -11,9 +11,11 @@ micro-batch — the canonical update-mode accumulator. State is Arrow-encoded
 pandas on the Python side; the state store itself (checkpointing, recovery,
 partitioning by key) is Spark's.
 
-Scale notes: state is partitioned by the group key across
-``spark.sql.shuffle.partitions`` state stores, exactly like the windowed
-aggregate; per-key state here is two scalars, so the per-key cost is tiny.
+Scale notes: state is partitioned by the group key across as many state
+stores as the query's shuffle-partition count when its checkpoint was
+created; :func:`~kafkasparkstream_spark.streaming.pipeline.pinned_shuffle_partitions`
+sets that count, as ``start_pipeline`` does for the windowed aggregate. Per-key
+state here is two scalars, so the per-key cost is tiny.
 For unbounded key domains, pass ``idle_timeout_ms`` to evict idle keys
 (ProcessingTimeTimeout) so the store is bounded by the active key set — but
 ONLY on continuously-triggered deployments: measured on this Spark build, a

@@ -41,7 +41,6 @@ from pyspark.sql import functions as F  # noqa: E402
 def run_mode(spark, events, mode: str, n_files: int) -> dict:
     from kafkasparkstream_spark.queries import (
         EVENT_WIRE_SCHEMA,
-        _clamped_shuffle_partitions,
         _events_to_wire,
         _stream_workdir,
         _wire_projection,
@@ -49,6 +48,7 @@ def run_mode(spark, events, mode: str, n_files: int) -> dict:
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import (
         PipelineConfig,
+        clamped_shuffle_partitions,
         parse_stage,
         windowed_aggregate_stage,
     )
@@ -105,7 +105,7 @@ def run_mode(spark, events, mode: str, n_files: int) -> dict:
     # cost, not the engine's.  availableNow drains the full backlog and
     # terminates; with maxFilesPerTrigger=1 it still honors the file cap per
     # micro-batch, giving n_files genuine state-carrying batches.
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         t0 = time.perf_counter()
         q = (
             agg.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))

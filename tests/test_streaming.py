@@ -105,6 +105,110 @@ def test_streaming_end_to_end(spark, tmp_path):
     assert got == want, f"\ngot:  {sorted(got)}\nwant: {sorted(want)}"
 
 
+def _timed_events(first: int, n: int) -> list[str]:
+    """``n`` sensor events 100 ms apart from event number ``first`` on, so
+    a later call's events are all on time for an earlier call's watermark."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1, 10, 0, 0)
+    return [
+        _event(
+            f"sensor_{i % 7}",
+            ("temperature", "humidity", "pressure")[i % 3],
+            ("room1", "kitchen")[i % 2],
+            (i * 37 % 10_000) / 100,
+            (i * 13 % 10_000) / 100,
+            (base + dt.timedelta(milliseconds=100 * i)).strftime("%Y-%m-%dT%H:%M:%S.%f"),
+        )
+        for i in range(first, first + n)
+    ]
+
+
+def _round_progress(spark, src, sink, ckpt, lines, name):
+    """Land one file of ``lines`` and run both pipeline queries over it
+    (availableNow); returns ``{query name: data-trigger progress}``."""
+    (src / name).write_text("\n".join(lines) + "\n")
+    raw = file_json_stream(spark, str(src), max_files_per_trigger=1)
+    queries = start_pipeline(raw, sink, ckpt, available_now=True)
+    for q in queries:
+        assert q.awaitTermination(300), f"{q.name} still running after 300 s"
+    return {
+        q.name: [p for p in q.recentProgress if p["numInputRows"] > 0] for q in queries
+    }
+
+
+def test_pipeline_executes_each_batch_once(spark, tmp_path):
+    """The sinks persist each micro-batch around the empty probe and the
+    write, so the batch plan runs once per trigger: the aggregate loads one
+    state store per partition (not two, as when the probe re-ran the
+    stateful aggregate), and the raw query reads each line once (the probe
+    used to read one line more)."""
+    assert spark.sparkContext.defaultParallelism == 8
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    src = tmp_path / "src"
+    src.mkdir()
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+
+    _round_progress(spark, src, sink, ckpt, _timed_events(0, 2000), "f1.json")
+    # Asserted on the second round: the first round's aggregate data
+    # trigger can be missing from recentProgress when the query ends.
+    progress = _round_progress(spark, src, sink, ckpt, _timed_events(2000, 2000), "f2.json")
+
+    agg, raw = progress["sensor_aggregates"], progress["sensor_data"]
+    assert agg and raw
+    assert [p["stateOperators"][0]["numStateStoreInstances"] for p in agg] == [8] * len(agg)
+    assert [p["numInputRows"] for p in raw] == [2000] * len(raw)
+
+
+def test_state_partitions_frozen_by_checkpoint(spark, tmp_path, monkeypatch):
+    """start_pipeline starts its queries under its own shuffle-partition
+    count and restores the session's; the first start's count is frozen
+    into the checkpoint, so a restart under other session and pipeline
+    counts keeps it, and the sinks still equal a batch recomputation."""
+    from kafkasparkstream_spark.streaming import pipeline
+
+    key = "spark.sql.shuffle.partitions"
+    session = spark.conf.get(key)
+    src = tmp_path / "src"
+    src.mkdir()
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    first, second = _timed_events(0, 300), _timed_events(300, 300)
+
+    with monkeypatch.context() as m:  # first start at 3 stores, not 8
+        m.setattr(pipeline, "STATE_STORE_CAP", 3)
+        progress = _round_progress(spark, src, sink, ckpt, first, "f1.json")
+    assert spark.conf.get(key) == session
+    stores = [p["stateOperators"][0]["numStateStoreInstances"]
+              for p in progress["sensor_aggregates"]]
+    assert set(stores) <= {3}
+
+    spark.conf.set(key, "5")
+    try:
+        progress = _round_progress(spark, src, sink, ckpt, second, "f2.json")
+        assert spark.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, session)
+    stores = [p["stateOperators"][0]["numStateStoreInstances"]
+              for p in progress["sensor_aggregates"]]
+    assert stores and set(stores) == {3}
+
+    cols = ("window_start", "window_end", "device_type", "location")
+    got_agg = latest_state(spark.read.parquet(f"{sink}/sensor_aggregates"), cols)
+    batch = parse_stage(
+        spark.createDataFrame([(v,) for v in first + second], ["value"]), PipelineConfig()
+    )
+    want_agg = windowed_aggregate_stage(batch, PipelineConfig())
+
+    def rows(df):  # avg_battery is a plain float avg: summation order shows
+        return sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in df.collect()
+        )
+
+    assert rows(got_agg) == rows(want_agg)
+    got_raw = spark.read.parquet(f"{sink}/sensor_data").drop("_batch_id")
+    assert sorted(map(tuple, got_raw.collect())) == sorted(map(tuple, batch.collect()))
+
+
 def test_rate_source_synthesizer(spark, tmp_path):
     """G1 analog: the rate-source generator emits parseable sensor JSON."""
     stream = rate_sensor_stream(spark, rows_per_second=50)
@@ -489,7 +593,7 @@ def test_compaction_after_streaming_appends(spark, tmp_path):
 def test_parquet_sink_retry_is_idempotent(spark, tmp_path):
     """A retried micro-batch (same batch_id re-delivered after a crash between
     sink write and checkpoint commit) must NOT double-append: the sink writes
-    each batch into its own _batch_id partition with dynamic overwrite, so the
+    each batch into its own _batch_id partition directory with overwrite, so the
     replay replaces its own data. This exceeds the reference's at-least-once
     contract (processor.py:133 duplicates on replay)."""
     from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
@@ -507,6 +611,23 @@ def test_parquet_sink_retry_is_idempotent(spark, tmp_path):
     assert out.select("user_id").distinct().count() == 3
     # batch stamp is still visible for latest_state-style idempotent reads
     assert set(r._batch_id for r in out.select("_batch_id").distinct().collect()) == {0, 1}
+
+
+def test_parquet_sink_batches_share_generated_code(spark, tmp_path):
+    """Batches of one schema must run the same generated code: a per-batch
+    value baked into the write plan would make Spark compile new classes for
+    every micro-batch."""
+    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    write = foreach_batch_parquet_sink(str(tmp_path / "out"))
+    batch = spark.range(100).selectExpr("id AS user_id", "id * 1.5 AS value")
+    write(batch, 0)
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    for batch_id in (1, 2, 3):
+        write(batch, batch_id)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 400
 
 
 def test_stateful_eviction_drops_idle_key(spark, tmp_path):
@@ -696,12 +817,14 @@ def test_left_outer_join_drains_tail_when_one_stream_ends_early(spark, tmp_path)
 
     from kafkasparkstream_spark.queries import (
         EVENT_WIRE_SCHEMA,
-        _clamped_shuffle_partitions,
         _wire_with_flush_sentinel,
     )
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
-    from kafkasparkstream_spark.streaming.pipeline import stream_interval_join
+    from kafkasparkstream_spark.streaming.pipeline import (
+        clamped_shuffle_partitions,
+        stream_interval_join,
+    )
     from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     base = dt.datetime(2024, 3, 1, 10, 0, 0)
@@ -734,7 +857,7 @@ def test_left_outer_join_drains_tail_when_one_stream_ends_early(spark, tmp_path)
         F.col("l.event_id").alias("click_id"), F.col("r.event_id").alias("error_id")
     )
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    with _clamped_shuffle_partitions(spark):
+    with clamped_shuffle_partitions(spark):
         q = (
             pairs.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
             .outputMode("append")
@@ -765,13 +888,13 @@ def test_interval_join_state_survives_restart(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from kafkasparkstream_spark.queries import (
-        EVENT_WIRE_SCHEMA,
-        _clamped_shuffle_partitions,
-    )
+    from kafkasparkstream_spark.queries import EVENT_WIRE_SCHEMA
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
-    from kafkasparkstream_spark.streaming.pipeline import stream_interval_join
+    from kafkasparkstream_spark.streaming.pipeline import (
+        clamped_shuffle_partitions,
+        stream_interval_join,
+    )
     from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     base = dt.datetime(2024, 5, 1, 9, 0, 0)
@@ -805,7 +928,7 @@ def test_interval_join_state_survives_restart(spark, tmp_path):
             F.col("l.event_id").alias("click_id"),
             F.col("r.event_id").alias("error_id"),
         )
-        with _clamped_shuffle_partitions(spark):
+        with clamped_shuffle_partitions(spark):
             q = (
                 pairs.writeStream.foreachBatch(
                     foreach_batch_parquet_sink(str(tmp_path / "sink"))
@@ -1257,16 +1380,16 @@ def test_clamped_shuffle_partitions_is_scale_aware(spark):
     store (per-provider commit overhead dominates at the sf0.01 gate);
     large replays (rows >= 200k) keep the session's full width — 8 state
     partitions on a 32-core session measured 2x the wall at sf1.0."""
-    from kafkasparkstream_spark.queries import _clamped_shuffle_partitions
+    from kafkasparkstream_spark.streaming.pipeline import clamped_shuffle_partitions
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    with _clamped_shuffle_partitions(spark, rows=10_000):
+    with clamped_shuffle_partitions(spark, rows=10_000):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(
             min(int(old), 8)
         )
-    with _clamped_shuffle_partitions(spark, rows=1_000_000):
+    with clamped_shuffle_partitions(spark, rows=1_000_000):
         assert spark.conf.get("spark.sql.shuffle.partitions") == old
-    with _clamped_shuffle_partitions(spark):  # rows unknown -> conservative
+    with clamped_shuffle_partitions(spark):  # rows unknown -> conservative
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(
             min(int(old), 8)
         )
