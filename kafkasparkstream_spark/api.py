@@ -28,12 +28,32 @@ Endpoint parity map (reference line refs from api-service/app.py):
 
 Determinism note: the reference anchors its ``aggregates`` time range at
 ``NOW()``; replayed test data is historical, so this shim anchors at the
-table's max window_start (same convention as ``serving.time_range_filter``).
+sink's max window_start (same convention as ``serving.time_range_filter``).
 
-Scale notes: every endpoint body is one declarative Spark plan over the sink
-tables — filters push into the parquet scan, ``latest`` plans as
-TakeOrderedAndProject (no full sort), and only final ≤100-row results are
-ever collected to the serving process.
+Scale notes: a request costs the Spark jobs its answer needs and no more
+(warm counts with adaptive execution on, pinned by ``tests/test_api.py``):
+
+- every endpoint reads a sink with the schema learned on that sink's first
+  successful read. A schema-less ``spark.read.parquet`` runs a footer
+  inference job on every call; a sink's schema is fixed by the query that
+  writes it, so learning it once is safe.
+- ``/api/data/latest`` (cache miss): 1 job. TakeOrderedAndProject keeps a
+  per-partition top 100 and merges them on the driver, with no full sort.
+- ``/api/stats``: 2 jobs, the partial-aggregate map stage and its result.
+  GROUPING SETS computes the count, both distributions and the time range
+  in one scan.
+- ``/api/sensors``: 2 jobs, the distinct's map stage and a one-partition
+  sort (``serving.sorted_for_collect``). ``orderBy`` would add a sampling
+  job and a range exchange to feed the one consumer, the driver.
+- ``/api/aggregates``: 3 jobs. The anchor is a top-1 scalar subquery in the
+  same plan (``serving.time_range_filter``), so it never comes back to
+  Python (1 job). The time and dimension filters go on the raw sink before
+  ``latest_state``, which is safe because both are on key columns (they
+  drop whole keys). Then the window's shuffle map stage and the
+  one-partition sort (2 jobs).
+
+Only final results are collected to the serving process: at most 100 rows
+for ``latest``, one row per window key and device dimension otherwise.
 """
 
 from __future__ import annotations
@@ -43,11 +63,14 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kafkasparkstream_spark.operators.serving import (
     ReadThroughCache,
     apply_dim_filters,
     latest_readings,
+    sorted_for_collect,
+    time_range_filter,
 )
 from kafkasparkstream_spark.streaming.sinks import latest_state
 
@@ -73,12 +96,20 @@ def create_app(
     app = Flask("kafkasparkstream-api")
     cache = cache if cache is not None else ReadThroughCache(ttl_seconds=300.0)
 
-    def _sensor_data() -> DataFrame:
-        return spark.read.parquet(f"{data_root}/sensor_data").drop("_batch_id")
+    schemas: dict[str, StructType] = {}
 
-    def _aggregates() -> DataFrame:
-        # update-mode refinements: serve only the latest row per window key
-        return latest_state(spark.read.parquet(f"{data_root}/sensor_aggregates"), AGG_KEYS)
+    def _read_sink(table: str) -> DataFrame:
+        # Learned only from a read that succeeded: a request made before the
+        # sink exists fails, and the next one infers the schema again.
+        path = f"{data_root}/{table}"
+        if table in schemas:
+            return spark.read.schema(schemas[table]).parquet(path)
+        df = spark.read.parquet(path)
+        schemas[table] = df.schema
+        return df
+
+    def _sensor_data() -> DataFrame:
+        return _read_sink("sensor_data").drop("_batch_id")
 
     def _respond(payload, status: int = 200):
         return app.response_class(
@@ -92,13 +123,8 @@ def create_app(
 
     @app.get("/api/sensors")
     def sensors():  # app.py:114-133
-        df = (
-            _sensor_data()
-            .select("device_id", "device_type", "location")
-            .distinct()
-            .orderBy("device_type", "location", "device_id")
-        )
-        return _respond(_rows(df))
+        df = _sensor_data().select("device_id", "device_type", "location").distinct()
+        return _respond(_rows(sorted_for_collect(df, "device_type", "location", "device_id")))
 
     @app.get("/api/data/latest")
     def latest():  # app.py:135-187
@@ -127,19 +153,18 @@ def create_app(
             return _respond({"detail": "hours must be an integer"}, 422)
         if not 1 <= hours <= 24:  # FastAPI Query(ge=1, le=24) analog
             return _respond({"detail": "hours must be in [1, 24]"}, 422)
-        df = _aggregates()
-        anchor = df.agg(F.max("window_start").alias("_anchor"))
-        df = (
-            df.join(F.broadcast(anchor))
-            .filter(F.col("window_start") >= F.col("_anchor") - F.expr(f"INTERVAL {hours} HOURS"))
-            .drop("_anchor")
-        )
-        df = apply_dim_filters(
-            df,
+        # The anchor is sink-wide: it is taken before any dimension filter.
+        recent = time_range_filter(_read_sink("sensor_aggregates"), "window_start", hours)
+        recent = apply_dim_filters(
+            recent,
             device_type=request.args.get("device_type"),
             location=request.args.get("location"),
         )
-        return _respond(_rows(df.orderBy(F.desc("window_start"), "device_type", "location")))
+        # update-mode refinements: serve only the latest row per window key
+        df = latest_state(recent, AGG_KEYS)
+        return _respond(
+            _rows(sorted_for_collect(df, F.desc("window_start"), "device_type", "location"))
+        )
 
     @app.get("/health")
     def health():  # app.py:230-235

@@ -51,23 +51,25 @@ def latest_readings(
     return df.orderBy(*order).limit(limit)
 
 
-def time_range_filter(
-    df: DataFrame,
-    ts_col: str,
-    hours: int,
-    now: DataFrame | None = None,
-) -> DataFrame:
+def sorted_for_collect(df: DataFrame, *order) -> DataFrame:
+    """Order a small result that the driver collects whole.
+
+    ``orderBy`` plans a range exchange whose bounds come from a separate
+    sampling job, only to feed one consumer. One partition sorted in place
+    collects in the same order with neither. The stage above the last
+    exchange then runs as one task, so keep this to serving-sized results."""
+    return df.coalesce(1).sortWithinPartitions(*order)
+
+
+def time_range_filter(df: DataFrame, ts_col: str, hours: int) -> DataFrame:
     """A2 (app.py:202-206): keep rows with ``ts >= anchor - INTERVAL h HOURS``.
 
     The reference anchors at ``NOW()``; for deterministic replay we anchor at
-    the table's own max event time (computed as a 1-row broadcast-joined
-    aggregate, so the whole thing stays one declarative plan — no collect)."""
-    anchor = now if now is not None else df.agg(F.max(ts_col).alias("_anchor"))
-    return (
-        df.join(F.broadcast(anchor))
-        .filter(F.col(ts_col) >= F.col("_anchor") - F.expr(f"INTERVAL {int(hours)} HOURS"))
-        .drop("_anchor")
-    )
+    the table's own max event time. The anchor is a top-1 scalar subquery of
+    the same plan: one job, never collected to Python, and NULL on an empty
+    table, where the filter keeps nothing."""
+    anchor = df.select(ts_col).orderBy(F.desc(ts_col)).limit(1).scalar()
+    return df.filter(F.col(ts_col) >= anchor - F.expr(f"INTERVAL {int(hours)} HOURS"))
 
 
 def recent_aggregates(

@@ -87,7 +87,6 @@ def test_no_degenerate_joins_anywhere(spark):
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         if "BroadcastNestedLoopJoin" in plan and name not in (
-            "recent_aggregates_24h",  # 1-row max(ts) anchor — sanctioned BNLJ
             "bm25_search",  # 1-row corpus-stats (N, avgdl) broadcast
             "wealthy_inactive_customers",  # 1-row global-avg(acctbal) broadcast
             "tfidf_top_terms",  # 1-row corpus doc-count broadcast
