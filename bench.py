@@ -330,18 +330,18 @@ def main() -> None:
         lambda it: it, "id long"
     ).count()
 
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
 
     timings: dict[str, float] = {}
     for name in sorted(queries):
         best = None
         for _ in range(repeat):
-            t0 = time.perf_counter()
-            n = _force(queries[name](spark, sf_dir))
-            dt = time.perf_counter() - t0
+            with query_scope(spark, name):  # frees the query's blocks, untimed
+                t0 = time.perf_counter()
+                n = _force(queries[name](spark, sf_dir))
+                dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 4)
-        deep_release(spark)  # nothing pinned legitimately outlives its query
         print(f"# {name}: {best:.3f}s ({n} rows)", file=sys.stderr)
 
     total = sum(timings.values())

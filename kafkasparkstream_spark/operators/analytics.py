@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafkasparkstream_spark.operators.aggregates import FLOAT_DP
+from kafkasparkstream_spark.util import current_scope
 
 
 def _revenue_units():
@@ -753,12 +754,12 @@ def skyline_2d(
     # without materialization Catalyst re-executes the whole upstream plan
     # (often an aggregate over a fact join) once per consumer. One eager
     # localCheckpoint pins the (post-aggregate, key-sized) table on
-    # executors; blocks free on GC via the context cleaner.
+    # executors until the query scope exits.
     co = (
         df.withColumn("_bkt", bkt)
         .withColumn("_xi", xi)
         .withColumn("_yi", yi)
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     g = co.groupBy("_bkt", "_xi").agg(F.max("_yi").alias("_gmax"))
     b = g.groupBy("_bkt").agg(F.max("_gmax").alias("_bmax"))

@@ -33,104 +33,7 @@ from kafkasparkstream_spark.operators.text import (
     shingles_col,
     token_hashes_col,
 )
-from kafkasparkstream_spark.util import checkpoint_tracked, fanout, free_rdd_ids
-
-#: Persisted intermediates (shingle arrays, simhash signatures) live past the
-#: operator call because the returned DataFrame is lazy — the cache must be
-#: populated when the CALLER materializes. Long-lived sessions running many
-#: dedup queries should call :func:`release_caches` between runs; bench.py
-#: does this after every timed query.
-_LIVE_CACHES: list[DataFrame] = []
-#: localCheckpoint block-id sets (with their SparkContext) still live from
-#: dedup operators — Dataset.unpersist is a no-op for checkpoint blocks, so
-#: these are freed via free_rdd_ids instead.
-_LIVE_CHECKPOINT_IDS: list[tuple] = []
-
-
-def _tracked_persist(df: DataFrame) -> DataFrame:
-    _LIVE_CACHES.append(df.persist())
-    return df
-
-
-def _tracked_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """localCheckpoint registered with the release ledger — callers outside
-    dedup (e.g. ann_recall_report's shared base) use this instead of a raw
-    ``localCheckpoint`` so :func:`release_caches` can free the blocks
-    deterministically (ADVICE r9: raw checkpoint blocks otherwise live
-    until driver GC in sessions that never call deep_release)."""
-    out, ids = checkpoint_tracked(df, eager=eager)
-    _LIVE_CHECKPOINT_IDS.append((df.sparkSession.sparkContext, ids))
-    return out
-
-
-def release_caches() -> int:
-    """Unpersist every cache and free every checkpoint block set created by
-    dedup operators; returns the count released.
-
-    Safe to call at any time ONLY between materializations — an unpersisted
-    cache silently recomputes, but a freed checkpoint block set makes the
-    DataFrames built on it unusable, so call this (as bench.py does) after
-    fully consuming an operator's output."""
-    n = 0
-    while _LIVE_CACHES:
-        df = _LIVE_CACHES.pop()
-        try:
-            # blocking=True: the default async unpersist lets multi-hundred-MB
-            # shingle caches linger into the NEXT query's working set —
-            # measured in the sf1.0 full bench as 2-4x inflation of whatever
-            # runs right after the jaccard/containment family (simhash
-            # 3.0 s clean -> 11.5 s contaminated). Synchronous release makes
-            # per-query timings independent of registry order.
-            df.unpersist(blocking=True)
-            n += 1
-        except Exception:
-            pass  # session already stopped
-    while _LIVE_CHECKPOINT_IDS:
-        sc, ids = _LIVE_CHECKPOINT_IDS.pop()
-        try:
-            free_rdd_ids(sc, ids)
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def deep_release(spark) -> int:
-    """Between-queries storage reset for long-lived sweep/bench sessions:
-    :func:`release_caches` plus everything the per-operator registry can't
-    see — raw ``localCheckpoint`` blocks from any query, catalog caches,
-    and terminated streaming queries' state-store providers (Spark keeps
-    each provider's last committed state map loaded until a maintenance
-    cycle unloads it).
-
-    Found the hard way: a full-registry sf1.0 sweep on a default-heap
-    local[8] session accumulated enough pinned storage over ~190 queries
-    that a later hash aggregate died with UNABLE_TO_ACQUIRE_MEMORY
-    (got 3598 of 65536 bytes). Nothing legitimately outlives its query in
-    a sweep, so between queries EVERYTHING pinned is garbage.
-
-    Never call this mid-query: it frees checkpoint blocks out from under
-    any still-unconsumed DataFrame. Returns blocks/handles released."""
-    n = release_caches()
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet()):
-            jmap.get(rid).unpersist(True)
-            n += 1
-    except Exception:
-        pass  # session already stopped
-    try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
-    try:
-        # Unload every state-store provider (same call Spark's own
-        # streaming tests use); the next streaming query reloads lazily.
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        n += 1
-    except Exception:
-        pass
-    return n
+from kafkasparkstream_spark.util import LocalCheckpointer, current_scope, fanout
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -198,7 +101,7 @@ def _shingle_arrays(
             F.col(id_col), F.array_distinct(shingles_col(text_col, n)).alias("sh_arr")
         )
     out = out.withColumn("n_sh", F.size("sh_arr"))
-    return _tracked_persist(out) if persist else out
+    return current_scope().persist(out) if persist else out
 
 
 def _distinct_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
@@ -729,7 +632,7 @@ def simhash_pairs(
     # Persist: the signature build (token explode + `bits` sum-aggs) is the
     # expensive subtree and both self-join branches need it. One row of
     # (id, bits-char string) per doc — tiny relative to the corpus.
-    sig = _tracked_persist(simhash(df, text_col, id_col, bits))
+    sig = current_scope().persist(simhash(df, text_col, id_col, bits))
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -821,34 +724,31 @@ def connected_components(
     minimum), so the iterative distributed algorithm is checked against a
     declarative single-node one.
     """
+    if checkpoint_mode not in ("local", "reliable"):
+        raise ValueError(f"checkpoint_mode must be 'local' or 'reliable', got {checkpoint_mode!r}")
+    scope = current_scope()
     # Materialize the pair list ONCE before mirroring: the union references
     # `e` twice, and without a populated cache both branches would re-run the
     # (expensive) candidate-generation lineage that produced `pairs`.
-    e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).persist()
+    e = scope.persist(pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")))
     n_edges = e.count()
     graph_parts = max(2, min(2048, n_edges // 1_000_000 + 2))
 
-    edges = (
+    edges = scope.persist(
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition(graph_parts, "v")
-        .persist()
     )
-    labels = (
+    labels = scope.persist(
         edges.select("u")
         .repartition(graph_parts, "u")
         .distinct()  # reuses the hash partitioning — no second exchange
         .withColumn("lbl", F.col("u"))
-        .persist()
     )
-    from kafkasparkstream_spark.util import LocalCheckpointer
-
-    if checkpoint_mode not in ("local", "reliable"):
-        raise ValueError(f"checkpoint_mode must be 'local' or 'reliable', got {checkpoint_mode!r}")
     # "reliable": per-round truncation goes through checkpoint() into the
     # session's checkpoint dir — survives executor preemption; see
     # graph.pagerank for the trade-off discussion.
-    ck = LocalCheckpointer(pairs.sparkSession, reliable=(checkpoint_mode == "reliable"))
-    for _ in range(max_iters):
+    ck = LocalCheckpointer(reliable=(checkpoint_mode == "reliable"))
+    for i in range(max_iters):
         # labels is hash-partitioned on u; the rename to v keeps the
         # partitioning attribute, so this join matches edges' partitioning.
         neighbor = (
@@ -863,7 +763,7 @@ def connected_components(
         # exchange) and the changed-count aggregate is the action that
         # materializes the lazy checkpoint — ONE job per round instead of
         # a materialize job plus a separate new-vs-old count join (r9;
-        # the checkpointer's history=1 keeps round k-1's blocks alive
+        # the checkpointer keeps round k-1's blocks alive
         # while round k materializes from them).
         new_labels_plan = (
             labels.select("u", "lbl")
@@ -875,14 +775,15 @@ def connected_components(
         )
         stepped = ck.step(new_labels_plan, eager=False)
         changed = stepped.filter(F.col("lbl") != F.col("_old")).count()
-        labels.unpersist()  # frees only round 0's persist; later rounds are
+        if i == 0:
+            scope.free(labels)  # round 0's persist; later rounds are
         labels = stepped.select("u", "lbl")  # checkpoint blocks, freed by ck.step()
         if changed == 0:
             break
-    edges.unpersist()
-    e.unpersist()
-    # released by release_caches() after the result is consumed
-    _LIVE_CACHES.append(ck.handle())
+    # The returned plan reads only the last checkpointed rounds, which the
+    # scope frees when it exits.
+    scope.free(edges)
+    scope.free(e)
     return labels.select(F.col("u").alias("doc_id"), F.col("lbl").alias("cluster_id")).orderBy(
         "doc_id"
     )
@@ -1134,8 +1035,6 @@ def edit_distance_pairs(
       per pair.
 
     Combined at sf1.0 (in-bench): 312.5 s → 8.7 s for identical output."""
-    from kafkasparkstream_spark.util import fanout
-
     b = docs.select(
         F.col(id_col).alias("_id"),
         F.trim(text_col).alias("_t"),
@@ -1157,13 +1056,12 @@ def edit_distance_pairs(
             F.col("b._t").alias("_tb"),
         )
     )
-    pairs, pairs_ids = checkpoint_tracked(pairs)
-    sc = docs.sparkSession.sparkContext
+    scope = current_scope()
+    pairs = scope.checkpoint(pairs)
     work = fanout(pairs)
-    work_ids: set = set()
     if work is not pairs:
-        work, work_ids = checkpoint_tracked(work)
-    scored = _tracked_checkpoint(
+        work = scope.checkpoint(work)
+    scored = scope.checkpoint(
         work.select(
             "id_a",
             "id_b",
@@ -1171,10 +1069,11 @@ def edit_distance_pairs(
         )
     )
     # The full-text pair lists behind the first two barriers are superseded
-    # the moment `scored` materializes — free them now instead of waiting
-    # for driver GC (each holds every candidate's _ta/_tb text); `scored`
-    # itself (three narrow columns) is released by release_caches().
-    free_rdd_ids(sc, pairs_ids | work_ids)
+    # the moment `scored` materializes — free them now instead of at scope
+    # exit (each holds every candidate's _ta/_tb text); `scored` itself
+    # (three narrow columns) lives until the scope exits.
+    scope.free(pairs)
+    scope.free(work)
     return scored.filter(
         (F.col("edit_dist") >= 0) & (F.col("edit_dist") <= max_dist)
     )

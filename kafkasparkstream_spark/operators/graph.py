@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafkasparkstream_spark.util import LocalCheckpointer, current_scope
+
 
 def pagerank(
     edges: DataFrame,
@@ -44,9 +46,10 @@ def pagerank(
     superlinearly; measured ~25-40% total win at 10 iterations), and each
     superseded truncation's blocks are freed as the next lands, so executor
     storage stays O(1) in iterations (only the final table — which the
-    returned plan reads — outlives the call). Fixed-iteration loops need no
-    intermediate materialization, so checkpointing every single round just
-    pays ``iterations`` eager jobs for nothing — interval truncation cut
+    returned plan reads — outlives the call, until the query scope exits).
+    Fixed-iteration loops need no intermediate materialization, so
+    checkpointing every single round just pays ``iterations`` eager jobs
+    for nothing — interval truncation cut
     the 10-iteration sf0.1 wall time ~40% (r5 profile, VERDICT item 7);
     convergence-CHECKED loops (connected components) materialize each round
     anyway for the change count, so this knob is specific to fixed-count
@@ -59,47 +62,44 @@ def pagerank(
     mid-computation at the cost of a write+read per truncation — the
     right default on spot/preemptible clusters.
     """
-    from kafkasparkstream_spark.util import LocalCheckpointer, checkpoint_tracked, free_rdd_ids
-
     if checkpoint_mode not in ("local", "reliable"):
         raise ValueError(f"checkpoint_mode must be 'local' or 'reliable', got {checkpoint_mode!r}")
+    if iterations < 1:  # the returned ranks must read a checkpointed round
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
     reliable = checkpoint_mode == "reliable"
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).persist()
+    scope = current_scope()
+    e = scope.persist(edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")))
     deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
-    ed, ed_ids = checkpoint_tracked(e.join(deg, "_src"), reliable=reliable)
-    try:
-        n = nodes.count()
-        np_, np_ids = checkpoint_tracked(nodes.select(F.col(id_col)), reliable=reliable)
-        ranks = np_.withColumn("rank", F.lit(1.0 / n))
-        teleport = (1.0 - damping) / n
-        ck = LocalCheckpointer(spark, reliable=reliable)
-        every = max(1, checkpoint_every)
-        for it in range(iterations):
-            inflow = (
-                ed.join(ranks, ed["_src"] == ranks[id_col])
-                .select("_dst", (F.col("rank") / F.col("_deg")).alias("_c"))
-                .groupBy("_dst")
-                .agg(F.sum("_c").alias("_inflow"))
-            )
-            ranks = np_.join(inflow, F.col(id_col) == F.col("_dst"), "left").select(
-                id_col,
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("_inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            # The FINAL round always checkpoints: the finally-block frees
-            # ed/np_'s blocks on return, so the returned plan must read a
-            # self-contained (checkpointed) table, exactly as before.
-            if (it + 1) % every == 0 or it + 1 == iterations:
-                ranks = ck.step(ranks)
-        return ranks.select(id_col, F.round("rank", 6).alias("rank")).orderBy(id_col)
-    finally:
-        e.unpersist()
-        # ed / np_ feed only the loop; the returned plan reads the final
-        # checkpointed ranks, so their blocks are safe to free here.
-        free_rdd_ids(spark.sparkContext, ed_ids | np_ids)
+    ed = scope.checkpoint(e.join(deg, "_src"), reliable=reliable)
+    n = nodes.count()
+    np_ = scope.checkpoint(nodes.select(F.col(id_col)), reliable=reliable)
+    ranks = np_.withColumn("rank", F.lit(1.0 / n))
+    teleport = (1.0 - damping) / n
+    ck = LocalCheckpointer(reliable=reliable)
+    every = max(1, checkpoint_every)
+    for it in range(iterations):
+        inflow = (
+            ed.join(ranks, ed["_src"] == ranks[id_col])
+            .select("_dst", (F.col("rank") / F.col("_deg")).alias("_c"))
+            .groupBy("_dst")
+            .agg(F.sum("_c").alias("_inflow"))
+        )
+        ranks = np_.join(inflow, F.col(id_col) == F.col("_dst"), "left").select(
+            id_col,
+            (
+                F.lit(teleport)
+                + F.lit(damping) * F.coalesce(F.col("_inflow"), F.lit(0.0))
+            ).alias("rank"),
+        )
+        # The FINAL round always checkpoints: e/ed/np_ are freed below, so
+        # the returned plan must read a self-contained (checkpointed) table.
+        if (it + 1) % every == 0 or it + 1 == iterations:
+            ranks = ck.step(ranks)
+    # e / ed / np_ feed only the loop; the final checkpointed ranks live
+    # until the scope exits.
+    for df in (e, ed, np_):
+        scope.free(df)
+    return ranks.select(id_col, F.round("rank", 6).alias("rank")).orderBy(id_col)
 
 
 def triangle_stats(edges: DataFrame) -> DataFrame:
@@ -133,7 +133,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         # (the RDD persists on first compute within the consuming job), but
         # construction stays execution-free — plan-only audits can build
         # this query without running the upstream kernel.
-        .localCheckpoint(eager=False)
+        .transform(current_scope().checkpoint, eager=False)
     )
     ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
     bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafkasparkstream_spark.util import current_scope
+
 #: Tiny per-language stopword lists for the n-gram/stopword language heuristic.
 #: Ordered dict — ties resolve to the first language listed.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -280,7 +282,7 @@ def bm25_scores(
     per_doc = (
         fanout(df.select(F.col(id_col), tokens_col(text_col).alias("_toks")))
         .select(F.col(id_col), F.size("_toks").alias("dl"), *tf_cols)
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -884,7 +886,7 @@ def ngram_novelty(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFram
         .withColumn("_th", token_hashes_col(text_col))
         .withColumn("_sh", F.array_distinct(shingle_hashes_col(F.col("_th"), n)))
         .drop(text_col, "_th")
-        .localCheckpoint(eager=False)
+        .transform(current_scope().checkpoint, eager=False)
     )
     base = hashed.select(
         "doc_id", F.size("_sh").cast("long").alias("n_shingles")
@@ -965,7 +967,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text") -> DataFrame:
         # join probe) whose differing column pruning defeats exchange reuse
         # — without it the explode+aggregate re-runs and the corpus is
         # scanned twice (measured sf1.0: 7.1→3.4 s cold, 2.0→1.5 s warm).
-        .localCheckpoint(eager=False)
+        .transform(current_scope().checkpoint, eager=False)
     )
     vocab = tf.groupBy("tok").agg(F.sum("c").alias("vc"))
     total = vocab.agg(F.sum("vc").cast("double").alias("n"))
@@ -1009,7 +1011,7 @@ def duplicated_span_stats(df: DataFrame, text_col: str = "text", n: int = 3) -> 
         .withColumn("_th", token_hashes_col(text_col))
         .withColumn("_sh", F.array_distinct(shingle_hashes_col(F.col("_th"), n)))
         .drop(text_col, "_th")
-        .localCheckpoint(eager=False)
+        .transform(current_scope().checkpoint, eager=False)
     )
     sh = hashed.select("doc_id", F.explode("_sh").alias("sh"))
     # distinct-per-doc explode ⇒ count(*) over the shingle == #docs containing it
@@ -1066,7 +1068,7 @@ def dsir_importance(
         # scoring join would otherwise each re-run the explode from the
         # scan (wash at sf1.0 wall — 7.3 vs 7.2 s warm — but one corpus
         # scan instead of two is the scale-governing term).
-        .localCheckpoint(eager=False)
+        .transform(current_scope().checkpoint, eager=False)
     )
     vocab = tf.groupBy("g").agg(
         F.sum("c").alias("rc"),
@@ -1175,7 +1177,7 @@ def curriculum_difficulty_deciles(
         # expensive part — sf10 probe measured 19.7 s without the barrier,
         # ~7 s with it. The 24-byte projection is what materializes, never
         # the corpus text.
-    ).localCheckpoint(eager=False)
+    ).transform(current_scope().checkpoint, eager=False)
     return (
         global_exact_ntile(
             per_doc, ["difficulty", "doc_id"], 10, distributed_threshold
@@ -1244,12 +1246,12 @@ def _bpe_train_from_types(types: DataFrame, merges: int) -> list[tuple[int, str,
     explode+aggregate (r10: the corpus collapses to the vocabulary ONCE;
     at 100 TB that is one corpus pass saved per fertility report)."""
     sep = " "  # never appears inside whitespace-tokenized symbols
-    words = (
+    scope = current_scope()
+    words = scope.persist(
         # char-split start state ((?!^)(?!$) interior-only split — a bare
         # (?!^) also matches end-of-string and leaves a phantom '' symbol
         # that would then win merges), armored as the two-space string
         types.select(F.col("freq"), _bpe_armor(F.col("w")).alias("s"))
-        .persist()
     )
     learned: list[tuple[int, str, str, int]] = []
     # ONE job per merge round: the pairs argmax both materializes the
@@ -1279,19 +1281,19 @@ def _bpe_train_from_types(types: DataFrame, merges: int) -> list[tuple[int, str,
         )
         top = pairs.orderBy(F.desc("cnt"), F.asc("pair")).limit(1).collect()
         if prev is not None:  # current table is cached now; parent can go
-            prev.unpersist()
+            scope.free(prev)
             prev = None
         if not top or top[0]["cnt"] <= 0:
             break
         left, right = top[0]["pair"].split(sep, 1)
         learned.append((rank, left, right, int(top[0]["cnt"])))
-        nxt = words.select(
-            "freq", _bpe_merge_replace(F.col("s"), left, right).alias("s")
-        ).persist()
+        nxt = scope.persist(
+            words.select("freq", _bpe_merge_replace(F.col("s"), left, right).alias("s"))
+        )
         prev, words = words, nxt
-    words.unpersist()
+    scope.free(words)
     if prev is not None:
-        prev.unpersist()
+        scope.free(prev)
     return learned
 
 
@@ -1320,12 +1322,15 @@ def quality_logreg_fit(
     toks = tokens_col(text_col)
     sw = F.array([F.lit(w) for w in QUALITY_STOPWORDS])
     n = F.size(toks)
-    feats = df.select(
-        (F.least(n, F.lit(128)) / F.lit(128.0)).alias("x1"),
-        (F.size(F.array_distinct(toks)) / n).alias("x2"),
-        (F.size(F.filter(toks, lambda t: F.array_contains(sw, t))) / n).alias("x3"),
-        (F.col("lang") == "en").cast("double").alias("y"),
-    ).persist()
+    scope = current_scope()
+    feats = scope.persist(
+        df.select(
+            (F.least(n, F.lit(128)) / F.lit(128.0)).alias("x1"),
+            (F.size(F.array_distinct(toks)) / n).alias("x2"),
+            (F.size(F.filter(toks, lambda t: F.array_contains(sw, t))) / n).alias("x3"),
+            (F.col("lang") == "en").cast("double").alias("y"),
+        )
+    )
     w = [0.0, 0.0, 0.0, 0.0]
     for _ in range(iterations):
         z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2") \
@@ -1346,7 +1351,7 @@ def quality_logreg_fit(
             F.avg(-(F.col("y") * F.log(p) + (1 - F.col("y")) * F.log(1 - p))), 4
         ).alias("log_loss")
     ).collect()[0]["log_loss"]
-    feats.unpersist()
+    scope.free(feats)
     spark = df.sparkSession
     return spark.createDataFrame(
         # + 0.0 normalizes IEEE -0.0 → +0.0 (signed-zero hash hazard — see
@@ -1391,7 +1396,8 @@ def remove_duplicated_spans(
         .withColumn("_th", F.transform("_toks", lambda t: F.xxhash64(t)))
         .withColumn("_sh", shingle_hashes_col(F.col("_th"), n))
         .drop(text_col, "_th")
-        .localCheckpoint(eager=False)  # two consumers: occurrence explode + rebuild
+        # two consumers: occurrence explode + rebuild
+        .transform(current_scope().checkpoint, eager=False)
     )
     occ = base.select(
         "doc_id", F.posexplode("_sh").alias("s", "h")  # s: 0-based start
@@ -1485,9 +1491,9 @@ def bpe_encode_stats(
         # share one materialization, and the RDD grain means a repeated
         # invocation re-executes from parquet instead of silently hitting
         # the CacheManager's plan-matched cache from a previous run (the
-        # module-wide convention for multi-consumer barriers; blocks are
-        # freed by the session's between-queries deep_release).
-        .localCheckpoint(eager=False)
+        # module-wide convention for multi-consumer barriers; the blocks
+        # live until the query scope exits).
+        .transform(current_scope().checkpoint, eager=False)
     )
     types_freq = tl.groupBy(F.col("tok").alias("w")).agg(F.sum("cnt").alias("freq"))
     learned = [

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafkasparkstream_spark.util import current_scope
+
 
 def latest_per_key(
     df: DataFrame,
@@ -400,7 +402,7 @@ def global_exact_ntile(
     part = (
         src.repartitionByRange(p, *order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     counts = sorted(
         (r["_pid"], r["c"])

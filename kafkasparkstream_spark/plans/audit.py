@@ -65,7 +65,7 @@ def plan_report(df: DataFrame) -> PlanReport:
 
 
 def stage_task_widths(spark, run) -> dict[int, int]:
-    """Execute ``run()`` under a throwaway job group and return
+    """Execute ``run()`` in its own :func:`query_scope` and return
     ``{stage_id: task_count}`` for every stage it ran — the RUNTIME
     parallelism audit that plan text cannot give.
 
@@ -79,26 +79,17 @@ def stage_task_widths(spark, run) -> dict[int, int]:
     just the final action) so eagerly-materialized stages
     (localCheckpoint barriers) are captured too.
     """
-    import uuid
     import warnings
 
+    from kafkasparkstream_spark.util import query_scope
+
     sc = spark.sparkContext
-    group = f"width-audit-{uuid.uuid4().hex[:8]}"
-    # Save/restore the caller's job group via the local properties that
-    # back it — clobbering it would break the caller's cancelJobGroup and
-    # UI grouping after this audit returns.
-    prior_group = sc.getLocalProperty("spark.jobGroup.id")
-    prior_desc = sc.getLocalProperty("spark.job.description")
-    sc.setJobGroup(group, "stage width audit", interruptOnCancel=False)
-    try:
+    with query_scope(spark, "stage width audit") as scope:
         run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prior_group)
-        sc.setLocalProperty("spark.job.description", prior_desc)
     tracker = sc.statusTracker()
     widths: dict[int, int] = {}
     evicted = 0
-    for jid in tracker.getJobIdsForGroup(group):
+    for jid in tracker.getJobIdsForGroup(scope.group):
         info = tracker.getJobInfo(jid)
         if info is None:
             evicted += 1

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from kafkasparkstream_spark.operators import similarity  # noqa: E402
 from kafkasparkstream_spark.tables import load_table
+from kafkasparkstream_spark.util import current_scope
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kafkasparkstream_spark.queries._shared import (  # noqa: E402
@@ -293,7 +294,7 @@ def user_series_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda d: F.coalesce(F.element_at(F.col("m"), d), F.lit(0)).cast("double"),
             ).alias("series"),
         )
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     return (
         similarity.knn_graph(vec, k=3, id_col="user_id", vec_col="series")
@@ -848,7 +849,7 @@ def knn_jaccard_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "neighbor_id")
         # eager=False: see triangle_stats — barrier without executing the
         # kernel at DataFrame-construction time.
-        .localCheckpoint(eager=False)
+        .transform(current_scope().checkpoint, eager=False)
     )
     deg = edges.groupBy("vec_id").agg(F.count(F.lit(1)).alias("d"))
     a, b = edges.alias("a"), edges.alias("b")
@@ -1069,9 +1070,9 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth), so the recall arithmetic itself is gate-checked, not
     just asserted in tests. All four method results are k x queries rows;
     the intersections are tiny joins."""
-    from kafkasparkstream_spark.operators.dedup import _tracked_checkpoint
     from kafkasparkstream_spark.util import fanout
 
+    scope = current_scope()
     emb = load_table(spark, "embeddings", sf_dir)
     # ONE scan + ONE round-robin fanout shared by every arm (r9): the table
     # has 7 consumers (exact ground truth + 6 approximate indexes), and each
@@ -1079,13 +1080,12 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The lazy localCheckpoint materializes on the first arm's job; every
     # later arm reads the cached blocks. At 100 TB this is the §5 cache
     # trade done right: 7 consumers, recompute = a full table scan each.
-    # Tracked (r10, ADVICE r9 #1): release_caches/deep_release frees these
-    # table-sized blocks deterministically once the report is consumed.
-    base = _tracked_checkpoint(fanout(emb.select("vec_id", "embedding")), eager=False)
+    # The table-sized blocks live until the query scope exits.
+    base = scope.checkpoint(fanout(emb.select("vec_id", "embedding")), eager=False)
     # Barrier: `exact` has |methods|+1 consumers (one intersection join per
     # method + the possible-count) and each would re-execute the GEMM
     # kernel (recompute audit flagged 6 evaluations).
-    exact = _tracked_checkpoint(
+    exact = scope.checkpoint(
         similarity.brute_force_topk(base).select("query_id", "neighbor_id"),
         eager=False,
     )
@@ -1093,7 +1093,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 10 ranks ARE ivfpq_topk(k=10) (same ADC window order), and the rerank
     # arm re-scores the same shortlist — barriered so the kernel executes
     # once (recompute_audit r8: was 2x).
-    short50 = _tracked_checkpoint(similarity.ivfpq_topk(base, k=50), eager=False)
+    short50 = scope.checkpoint(similarity.ivfpq_topk(base, k=50), eager=False)
     methods = {
         "ivf": similarity.ivf_topk(base),
         "ivfpq": short50.filter(F.col("rnk") <= 10),

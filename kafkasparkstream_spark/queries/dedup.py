@@ -7,6 +7,7 @@ from __future__ import annotations
 from kafkasparkstream_spark.operators import dedup  # noqa: E402
 from kafkasparkstream_spark.operators import text as text_ops  # noqa: E402
 from kafkasparkstream_spark.tables import load_table
+from kafkasparkstream_spark.util import current_scope
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kafkasparkstream_spark.queries._shared import (  # noqa: E402
@@ -478,7 +479,7 @@ def training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm.groupBy(F.md5(F.col("norm_text").cast("binary")).alias("_h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        .localCheckpoint(eager=False)
+        .transform(current_scope().checkpoint, eager=False)
     )
     kd = kept.join(keepers, "doc_id").select("doc_id", "text", "quality")
     # Pair-grain victim set (doc_b side of every verified pair) → explicit

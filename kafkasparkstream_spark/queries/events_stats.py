@@ -11,6 +11,7 @@ from kafkasparkstream_spark.operators import temporal  # noqa: E402
 from kafkasparkstream_spark.operators import windows as win_ops  # noqa: E402
 from kafkasparkstream_spark.operators import windows as windows_ops  # noqa: E402
 from kafkasparkstream_spark.tables import load_table
+from kafkasparkstream_spark.util import current_scope
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kafkasparkstream_spark.queries._shared import (  # noqa: E402
@@ -1427,7 +1428,7 @@ def jackknife_mean_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("value").alias("sf"), F.count(F.lit(1)).alias("nf"))
         # |types|x16 rows feeding two consumers (totals + rejoin): pin it
         # so the fact scan runs once
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     tot = pf.groupBy("event_type").agg(
         F.sum("sf").alias("s"), F.sum("nf").alias("n"), F.count(F.lit(1)).alias("nfolds")

@@ -8,6 +8,7 @@ from kafkasparkstream_spark.operators import temporal  # noqa: E402
 from kafkasparkstream_spark.operators import windows as win_ops  # noqa: E402
 from kafkasparkstream_spark.operators import windows as windows_ops  # noqa: E402
 from kafkasparkstream_spark.tables import load_table
+from kafkasparkstream_spark.util import current_scope
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kafkasparkstream_spark.queries._shared import (  # noqa: E402
@@ -906,7 +907,7 @@ def peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = (
         deltas.repartitionByRange(8, "t", "delta")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     w_local = (
         Window.partitionBy("pid")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from kafkasparkstream_spark.operators import analytics  # noqa: E402
 from kafkasparkstream_spark.tables import load_table
+from kafkasparkstream_spark.util import current_scope
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from kafkasparkstream_spark.queries._shared import (  # noqa: E402
@@ -668,7 +669,7 @@ def brand_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_set("p_brand").alias("bs"))
         # three consumers (total, marginals, pairs) — materialize the
         # basket-sized table once instead of re-running the fact join+agg
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     tot = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     bc = baskets.select(F.explode("bs").alias("p_brand")).groupBy("p_brand").agg(
@@ -989,7 +990,7 @@ def revenue_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         r1.join(r2, "o_custkey")
         .orderBy(F.desc("rev1"), "o_custkey")
         .limit(100)
-        .localCheckpoint()
+        .transform(current_scope().checkpoint)
     )
     a, b = top.alias("a"), top.alias("b")
     conc = F.when(

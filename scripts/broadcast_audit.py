@@ -113,7 +113,7 @@ def main() -> int:
 
     import __spark_entry__ as E
 
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     bad, errors = {}, {}
@@ -124,13 +124,12 @@ def main() -> int:
         if name.startswith("streaming_") or name == "python_stream_source_gen":
             continue
         try:
-            df = E.queries()[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(mode)
+            with query_scope(spark, name):
+                df = E.queries()[name](spark, sf_dir)
+                plan = df._jdf.queryExecution().explainString(mode)
         except Exception as e:  # noqa: BLE001 - record and move on
             errors[name] = repr(e)[:120]
             continue
-        finally:
-            deep_release(spark)
         hits = flagged_broadcasts(plan)
         if hits:
             if name in SANCTIONED:

@@ -90,7 +90,7 @@ def main() -> int:
     if args.strict_floats:
         oracle_mod.STRICT_FLOATS = True
 
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
 
     # All-pairs oracle SQL: every oracle that joins a shingle/embedding
     # explosion against itself without an LSH-style prune on the DuckDB
@@ -156,17 +156,17 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            df = Q[name](spark, args.sf_dir)
-            if name in O:
-                assert_matches_oracle(df, O[name], args.sf_dir, name=name)
-            else:
-                df.count()  # rows-only check, same as the driver
+            with query_scope(spark, name):
+                df = Q[name](spark, args.sf_dir)
+                if name in O:
+                    assert_matches_oracle(df, O[name], args.sf_dir, name=name)
+                else:
+                    df.count()  # rows-only check, same as the driver
             passed += 1
             print(f"PASS {name} ({time.time() - t0:.1f}s)", flush=True)
         except Exception as e:  # noqa: BLE001 - sweep must not die mid-run
             fails.append((name, repr(e)[:300]))
             print(f"FAIL {name}: {repr(e)[:200]}", flush=True)
-        deep_release(spark)
     print(
         f"\n=== {args.sf_dir}: {passed} passed, {len(fails)} failed, "
         f"{len(skipped)} skipped (oracle-infeasible), {time.time() - t_start:.0f}s"

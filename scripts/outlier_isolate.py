@@ -21,7 +21,7 @@ CHILD = r"""
 import json, sys, time
 sys.path.insert(0, @HERE@)
 from kafkasparkstream_spark.session import get_spark
-from kafkasparkstream_spark.operators.dedup import deep_release
+from kafkasparkstream_spark.util import query_scope
 import __spark_entry__ as E
 
 name, repeats, sf_dir = sys.argv[1], int(sys.argv[2]), sys.argv[3]
@@ -34,10 +34,10 @@ spark.range(64, numPartitions=32).mapInPandas(lambda it: it, "id long").count()
 q = E.queries()[name]
 times = []
 for _ in range(repeats):
-    t0 = time.perf_counter()
-    n = len(q(spark, sf_dir).collect())
-    times.append(round(time.perf_counter() - t0, 4))
-    deep_release(spark)
+    with query_scope(spark, name):
+        t0 = time.perf_counter()
+        n = len(q(spark, sf_dir).collect())
+        times.append(round(time.perf_counter() - t0, 4))
 print("RESULT " + json.dumps({"name": name, "rows": n, "times": times,
                               "min": min(times)}))
 """

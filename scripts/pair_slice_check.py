@@ -144,7 +144,7 @@ def build_slice(cfg) -> None:
 
 
 def sampled_oracle(spark, cfg, results) -> list[tuple[str, str]]:
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
 
     import __spark_entry__ as E
     from oracle import assert_matches_oracle
@@ -155,22 +155,22 @@ def sampled_oracle(spark, cfg, results) -> list[tuple[str, str]]:
         t0 = time.time()
         row = results.setdefault(name, {})
         try:
-            df = Q[name](spark, str(cfg["slice_dir"]))
-            if name in O:
-                assert_matches_oracle(df, O[name], str(cfg["slice_dir"]), name=name)
-                row["sampled_oracle"] = "PASS"
-                print(f"PASS sampled-oracle {name} ({time.time() - t0:.1f}s)", flush=True)
-            else:
-                df.count()
-                row["sampled_oracle"] = "PASS (rows-only)"
-                print(f"PASS rows-only {name} ({time.time() - t0:.1f}s)", flush=True)
+            with query_scope(spark, name):
+                df = Q[name](spark, str(cfg["slice_dir"]))
+                if name in O:
+                    assert_matches_oracle(df, O[name], str(cfg["slice_dir"]), name=name)
+                    row["sampled_oracle"] = "PASS"
+                    print(f"PASS sampled-oracle {name} ({time.time() - t0:.1f}s)", flush=True)
+                else:
+                    df.count()
+                    row["sampled_oracle"] = "PASS (rows-only)"
+                    print(f"PASS rows-only {name} ({time.time() - t0:.1f}s)", flush=True)
         except Exception as e:  # noqa: BLE001 - record and continue
             fails.append((name, repr(e)[:300]))
             row["sampled_oracle"] = f"FAIL: {repr(e)[:200]}"
             print(f"FAIL sampled-oracle {name}: {repr(e)[:200]}", flush=True)
         row["sampled_wall_s"] = round(time.time() - t0, 1)
         _flush(cfg, results)
-        deep_release(spark)
     return fails
 
 
@@ -198,7 +198,7 @@ def _fingerprint(df):
 
 
 def invariance_full(spark, cfg, results) -> list[tuple[str, str]]:
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
 
     import __spark_entry__ as E
 
@@ -217,8 +217,8 @@ def invariance_full(spark, cfg, results) -> list[tuple[str, str]]:
             fps = []
             for parts in ("16", "64"):
                 spark.conf.set("spark.sql.shuffle.partitions", parts)
-                fps.append(_fingerprint(Q[name](spark, str(cfg["sf_dir"]))))
-                deep_release(spark)
+                with query_scope(spark, name):
+                    fps.append(_fingerprint(Q[name](spark, str(cfg["sf_dir"]))))
             if fps[0] != fps[1]:
                 fails.append((name, f"partition-dependent result: {fps[0]} != {fps[1]}"))
                 row["invariance"] = f"FAIL: {fps[0]} != {fps[1]}"

@@ -73,7 +73,7 @@ def flagged_kernels(plan: str) -> dict[tuple[str, str], int]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
     from kafkasparkstream_spark.session import get_spark
 
     spark = get_spark(app_name="recompute-audit")
@@ -90,13 +90,12 @@ def main() -> int:
         if name.startswith("streaming_") or name == "python_stream_source_gen":
             continue
         try:
-            df = E.queries()[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(mode)
+            with query_scope(spark, name):
+                df = E.queries()[name](spark, sf_dir)
+                plan = df._jdf.queryExecution().explainString(mode)
         except Exception as e:  # noqa: BLE001 - record and move on
             errors[name] = repr(e)[:120]
             continue
-        finally:
-            deep_release(spark)
         dup = flagged_kernels(plan)
         if dup:
             if name in SANCTIONED:

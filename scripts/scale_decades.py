@@ -9,7 +9,7 @@ ratio, linear shows ~10x (documents) / ~4x-ish supra-linear only where
 output size itself grows (pair queries over replicated corpora).
 
 Each query runs once cold (these are scale probes, not minima hunts) with
-deep_release between queries so no pinned storage bleeds across
+each query in its own query_scope so no pinned storage bleeds across
 measurements (session-pinned-storage hazard, r4).
 
 Usage:
@@ -100,7 +100,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
     from kafkasparkstream_spark.session import get_spark
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
     import __spark_entry__ as entrymod
 
     spark = get_spark(app_name="scale-decades")
@@ -137,7 +137,9 @@ def main() -> int:
                 # rows (the replicated corpus forms near-dup cliques), and
                 # collect() would measure driver materialization, not plan
                 # cost.
-                n = queries[name](spark, sf_dir).count()
+                with query_scope(spark, name):
+                    n = queries[name](spark, sf_dir).count()
+                    dt = round(time.perf_counter() - t0, 2)
             except Exception as e:  # record the failure, keep probing
                 dt = round(time.perf_counter() - t0, 2)
                 err = str(e).splitlines()[0][:200] if str(e) else repr(e)[:200]
@@ -155,8 +157,6 @@ def main() -> int:
                 spark = get_spark(app_name="scale-decades")
                 spark.sparkContext.setLogLevel("ERROR")
                 continue
-            dt = round(time.perf_counter() - t0, 2)
-            deep_release(spark)
             result["queries"].setdefault(name, {})[label] = {"sec": dt, "rows": n}
             print(f"{label} {name}: {dt}s ({n} rows)", flush=True)
 

@@ -45,7 +45,7 @@ HEAVY_QUERIES = [
 def run_inner() -> None:
     sys.path.insert(0, REPO)
     from kafkasparkstream_spark.session import get_spark
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
 
     import __spark_entry__ as entrymod
 
@@ -67,11 +67,11 @@ def run_inner() -> None:
             continue
         best = None
         for _ in range(reps):
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).collect()
-            dt = time.perf_counter() - t0
+            with query_scope(spark, name):
+                t0 = time.perf_counter()
+                queries[name](spark, sf_dir).collect()
+                dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-        deep_release(spark)
         out[name] = round(best, 3)
         print(f"# {name}: {best:.2f}s", file=sys.stderr)
     print("SCALING_RESULT " + json.dumps(out))

@@ -71,7 +71,7 @@ CONFIGS = [
 def run_inner(which: str) -> None:
     sys.path.insert(0, REPO)
     from kafkasparkstream_spark.session import get_spark
-    from kafkasparkstream_spark.operators.dedup import deep_release
+    from kafkasparkstream_spark.util import query_scope
 
     import __spark_entry__ as entrymod
 
@@ -93,10 +93,10 @@ def run_inner(which: str) -> None:
     for name in names:
         times = []
         for _ in range(reps):
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).collect()
-            times.append(round(time.perf_counter() - t0, 4))
-        deep_release(spark)
+            with query_scope(spark, name):
+                t0 = time.perf_counter()
+                queries[name](spark, sf_dir).collect()
+                times.append(round(time.perf_counter() - t0, 4))
         out[name] = times
     print("AB_RESULT " + json.dumps(out))
 

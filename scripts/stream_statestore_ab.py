@@ -55,8 +55,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
 
-    from kafkasparkstream_spark.operators.dedup import deep_release
     from kafkasparkstream_spark.tables import TABLE_NAMES, load_table
+    from kafkasparkstream_spark.util import query_scope
 
     for t in TABLE_NAMES:
         load_table(spark, t, sf_dir).count()
@@ -70,11 +70,10 @@ def main() -> None:
                 spark.conf.set(k, v)
             try:
                 for qname in QUERIES:
-                    spark.sparkContext.setJobDescription(f"{cname}:{qname}")
-                    t0 = time.perf_counter()
-                    n = len(queries[qname](spark, sf_dir).collect())
-                    dt = round(time.perf_counter() - t0, 3)
-                    deep_release(spark)
+                    with query_scope(spark, f"{cname}:{qname}"):
+                        t0 = time.perf_counter()
+                        n = len(queries[qname](spark, sf_dir).collect())
+                        dt = round(time.perf_counter() - t0, 3)
                     results.setdefault(qname, {}).setdefault(cname, []).append(dt)
                     print(f"round {r} {cname} {qname}: {dt:.2f}s ({n} rows)",
                           file=sys.stderr)

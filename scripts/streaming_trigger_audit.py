@@ -30,8 +30,8 @@ DEFAULT = [
 def main() -> None:
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from kafkasparkstream_spark.operators.dedup import deep_release
     from kafkasparkstream_spark.session import get_spark
+    from kafkasparkstream_spark.util import query_scope
     import __spark_entry__ as E
 
     names = sys.argv[1:] or DEFAULT
@@ -64,13 +64,14 @@ def main() -> None:
     for name in names:
         q = E.queries()[name]
         # warm run: plan compile + python worker pool, not billed
-        q(spark, sf_dir).collect()
-        deep_release(spark)
+        with query_scope(spark, name):
+            q(spark, sf_dir).collect()
         time.sleep(2.0)  # drain the warm run's ASYNC listener events first,
         progresses.clear()  # or they bleed into the timed window
-        t0 = time.perf_counter()
-        n = len(q(spark, sf_dir).collect())
-        wall = time.perf_counter() - t0
+        with query_scope(spark, name):
+            t0 = time.perf_counter()
+            n = len(q(spark, sf_dir).collect())
+            wall = time.perf_counter() - t0
         time.sleep(2.0)  # listener events are async
         batches = list(progresses)  # every trigger counts, incl. 0-input ones
         trig = sum(p["durationMs"].get("triggerExecution", 0) for p in batches)
@@ -100,7 +101,6 @@ def main() -> None:
         }
         out[name] = rec
         print(name, rec, flush=True)
-        deep_release(spark)
 
     path = os.path.join(HERE, "STREAM_TRIGGER_AUDIT.json")
     # Merge per-SF so cross-scale blocks accumulate (VERDICT r7 item 6):

@@ -38,6 +38,14 @@ def test_bad_mode_rejected(spark):
         connected_components(_edges(spark), checkpoint_mode="hdfs")
 
 
+def test_pagerank_rejects_zero_iterations(spark):
+    # with no round there is no checkpointed rank table to return: the
+    # ranks would read the node table's blocks, which pagerank frees
+    e = _edges(spark).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    with pytest.raises(ValueError, match="iterations"):
+        pagerank(e, e.select(F.col("src").alias("vec_id")), iterations=0)
+
+
 @pytest.fixture()
 def ckpt_dir(spark):
     d = tempfile.mkdtemp(prefix="kss_ckpt_")

@@ -14,6 +14,7 @@ from tests.oracle import (
     duckdb_run,
     oracle_type_ok,
 )
+from kafkasparkstream_spark.util import query_scope
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
@@ -107,14 +108,25 @@ def test_entry_smoke(spark):
     assert df.schema is not None
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, name):
-    df = QUERIES[name](spark, SF_CORRECT)
-    if name not in ORACLES:
-        # Non-SQL-expressible op: driver does a rows-only check.
-        assert df.count() >= 0
-        return
-    assert_matches_oracle(df, ORACLES[name], SF_CORRECT, name=name)
+    """Each query runs in its own query_scope, collect included, and must
+    leave no RDD persisted once the scope exits: every cache and checkpoint
+    it takes goes through the scope's helpers."""
+    before = _persisted_rdds(spark)
+    with query_scope(spark, name):
+        df = QUERIES[name](spark, SF_CORRECT)
+        if name in ORACLES:
+            assert_matches_oracle(df, ORACLES[name], SF_CORRECT, name=name)
+        else:
+            # Non-SQL-expressible op: driver does a rows-only check.
+            assert df.count() >= 0
+    leaked = _persisted_rdds(spark) - before
+    assert not leaked, f"{name} left {len(leaked)} persisted RDD(s) after its scope"
 
 
 

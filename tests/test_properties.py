@@ -1019,18 +1019,19 @@ def test_containment_prefix_filter_matches_bruteforce(spark, docs, threshold):
     import math
     import re
 
-    from kafkasparkstream_spark.operators.dedup import containment_pairs, release_caches
+    from kafkasparkstream_spark.operators.dedup import containment_pairs
+    from kafkasparkstream_spark.util import query_scope
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
     )
-    got = {
-        (r["doc_a"], r["doc_b"], r["containment"])
-        for r in containment_pairs(
-            df, n=3, threshold=threshold, max_shingle_freq=None
-        ).collect()
-    }
-    release_caches()
+    with query_scope(spark, "containment_property"):
+        got = {
+            (r["doc_a"], r["doc_b"], r["containment"])
+            for r in containment_pairs(
+                df, n=3, threshold=threshold, max_shingle_freq=None
+            ).collect()
+        }
 
     def sh(text):
         toks = [t for t in re.split(" +", text.strip())]

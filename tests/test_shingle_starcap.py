@@ -22,8 +22,8 @@ from kafkasparkstream_spark.operators.dedup import (
     connected_components,
     containment_pairs,
     ngram_jaccard_pairs,
-    release_caches,
 )
+from kafkasparkstream_spark.util import query_scope
 
 
 def _planted(spark, clones=120, normals=60):
@@ -42,48 +42,48 @@ def _planted(spark, clones=120, normals=60):
 
 def test_planted_clique_blows_up_exact_mode(spark):
     df = _planted(spark, clones=120)
-    full = ngram_jaccard_pairs(df, max_shingle_freq=None)
-    # every clone pair qualifies: C(120,2) = 7140
-    assert full.count() == 7140
-    release_caches()
+    with query_scope(spark, "exact_mode"):
+        full = ngram_jaccard_pairs(df, max_shingle_freq=None)
+        # every clone pair qualifies: C(120,2) = 7140
+        assert full.count() == 7140
 
 
 def test_star_cap_bounds_output_and_scores_exactly(spark):
     df = _planted(spark, clones=120)
-    full = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, max_shingle_freq=None).collect()
-    }
-    capped = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, max_shingle_freq=50).collect()
-    }
+    with query_scope(spark, "star_cap"):
+        full = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in ngram_jaccard_pairs(df, max_shingle_freq=None).collect()
+        }
+        capped = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in ngram_jaccard_pairs(df, max_shingle_freq=50).collect()
+        }
     # star: hub (doc 0) vs each clone — linear, not quadratic
     assert len(capped) == 119
     # every capped pair is a true pair with the identical EXACT score
     # (the cap prunes candidates, never the verification)
     assert set(capped) <= set(full)
     assert all(full[k] == v for k, v in capped.items())
-    release_caches()
 
 
 def test_star_edges_recover_clique_clusters(spark):
     df = _planted(spark, clones=120)
-    full = ngram_jaccard_pairs(df, max_shingle_freq=None).select("doc_a", "doc_b")
-    capped = ngram_jaccard_pairs(df, max_shingle_freq=50).select("doc_a", "doc_b")
-    cf = {(r["doc_id"], r["cluster_id"]) for r in connected_components(full).collect()}
-    cc = {(r["doc_id"], r["cluster_id"]) for r in connected_components(capped).collect()}
+    with query_scope(spark, "star_clusters"):
+        full = ngram_jaccard_pairs(df, max_shingle_freq=None).select("doc_a", "doc_b")
+        capped = ngram_jaccard_pairs(df, max_shingle_freq=50).select("doc_a", "doc_b")
+        cf = {(r["doc_id"], r["cluster_id"]) for r in connected_components(full).collect()}
+        cc = {(r["doc_id"], r["cluster_id"]) for r in connected_components(capped).collect()}
     assert cf == cc
-    release_caches()
 
 
 def test_cap_is_noop_when_no_shingle_is_hot(spark):
     df = _planted(spark, clones=8, normals=40)
     for op, kw in ((ngram_jaccard_pairs, {}), (containment_pairs, {})):
-        a = sorted(map(tuple, op(df, max_shingle_freq=None, **kw).collect()))
-        b = sorted(map(tuple, op(df, max_shingle_freq=50, **kw).collect()))
+        with query_scope(spark, op.__name__):
+            a = sorted(map(tuple, op(df, max_shingle_freq=None, **kw).collect()))
+            b = sorted(map(tuple, op(df, max_shingle_freq=50, **kw).collect()))
         assert a == b, op.__name__
-    release_caches()
 
 
 def test_default_is_capped(spark):
@@ -91,9 +91,9 @@ def test_default_is_capped(spark):
     clique yields star-sized, not quadratic, pair counts under BOTH
     operators' defaults."""
     df = _planted(spark, clones=120)
-    assert ngram_jaccard_pairs(df).count() == 119
-    assert containment_pairs(df).count() == 119
-    release_caches()
+    with query_scope(spark, "default_capped"):
+        assert ngram_jaccard_pairs(df).count() == 119
+        assert containment_pairs(df).count() == 119
 
 
 def test_registered_capped_queries_match_mirrored_oracles(spark):
@@ -108,5 +108,6 @@ def test_registered_capped_queries_match_mirrored_oracles(spark):
 
     sf = "/root/testdata/sf0.01"
     for name in ("dedup_ngram_jaccard_capped", "dedup_containment_capped"):
-        df = E.queries()[name](spark, sf)
-        assert_matches_oracle(df, E.oracle_sql()[name], sf, name=name)
+        with query_scope(spark, name):
+            df = E.queries()[name](spark, sf)
+            assert_matches_oracle(df, E.oracle_sql()[name], sf, name=name)

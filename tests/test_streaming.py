@@ -1317,64 +1317,6 @@ def test_upsert_read_before_any_batch(spark, tmp_path):
         read_upsert_table(spark, tbl)
 
 
-def test_deep_release_frees_pinned_storage_and_streaming_survives(spark, tmp_path):
-    """deep_release must (a) drop raw localCheckpoint blocks that no
-    per-operator registry tracks, and (b) unload state-store providers
-    WITHOUT breaking a subsequent streaming query — the long-session leak
-    that starved a hash aggregate of execution memory ~190 queries into a
-    full-registry sf1.0 sweep (UNABLE_TO_ACQUIRE_MEMORY)."""
-    from pyspark.sql import functions as F
-
-    from kafkasparkstream_spark.operators.dedup import deep_release
-    from kafkasparkstream_spark.sources.streams import file_json_stream
-    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
-
-    # (a) a raw (untracked) localCheckpoint pins blocks
-    df = spark.range(1000).withColumn("v", F.col("id") * 2).localCheckpoint()
-    assert df.count() == 1000
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() >= 1
-    deep_release(spark)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-
-    # (b) streaming works after a provider unload: run the same tiny
-    # replay twice with deep_release in between
-    import json
-
-    src = tmp_path / "src"
-    src.mkdir()
-    rows = [{"id": i, "ts": f"2024-01-01T00:00:{i % 60:02d}", "v": i} for i in range(50)]
-    (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
-
-    def replay(tag: str) -> int:
-        out, ckpt = str(tmp_path / f"out_{tag}"), str(tmp_path / f"ckpt_{tag}")
-        raw = file_json_stream(spark, str(src), max_files_per_trigger=None)
-        parsed = raw.selectExpr(
-            "CAST(get_json_object(value, '$.id') AS LONG) AS id",
-            "CAST(get_json_object(value, '$.ts') AS TIMESTAMP) AS ts",
-            "CAST(get_json_object(value, '$.v') AS LONG) AS v",
-        )
-        agg = (
-            parsed.withWatermark("ts", "1 minute")
-            .groupBy(F.window("ts", "1 minute").alias("w"))
-            .agg(F.sum("v").alias("sv"), F.count(F.lit(1)).alias("n"))
-            .select("w.start", "sv", "n")
-        )
-        q = (
-            agg.writeStream.foreachBatch(foreach_batch_parquet_sink(out))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out).agg(F.sum("n")).collect()[0][0]
-
-    n1 = replay("one")
-    deep_release(spark)
-    n2 = replay("two")
-    assert n1 == n2 == 50
-
-
 def test_clamped_shuffle_partitions_is_scale_aware(spark):
     """Bounded-replay state-store sizing: small replays pin the 8-provider
     store (per-provider commit overhead dominates at the sf0.01 gate);
