@@ -1,30 +1,27 @@
 """Benchmark harness: wall-clock per registered query at $SPARK_GRAFT_SF_DIR.
 
 Runs every ``__spark_entry__.queries()`` entry on
-``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``), forces full execution
-with a count-collect, and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``), timed by
+:func:`perf.time_query` (full collect, each repeat in its own query scope)
+after :func:`perf.warm_up`, and prints ONE JSON line:
 
     {"metric": "total_query_sec", "value": N, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": 0.1}
 
 The driver that consumes this output captures only the LAST 2000 bytes of
 stdout, so the JSON line must fit in that window with every per-query timing
-present.  88+ full query names don't fit, so the ``queries`` keys are
-abbreviated with the deterministic token dictionary below (``ann_cosine_topk``
--> ``ann_cos_topk``).  The full-fidelity record is written to
-``BENCH_DETAIL.json`` (full names, 4-decimal timings) and the short->full
-mapping to ``BENCH_KEYS.json``, both in the repo root; per-query lines with
-full names also go to stderr.  The short-key assignment is FROZEN from round
-10 on (VERDICT r9 #3): a committed ``BENCH_KEYS.json`` is reused verbatim so
-keys never change meaning between rounds, new queries mint keys from the
-unused pool, and retired keys are never recycled.  Precision is uniform when
-it fits; otherwise whole seconds everywhere with the slowest cells upgraded
-to 2dp inside the byte budget (VERDICT r9 #7).  Without a frozen map the
-legacy degradation applies: 3dp -> 2dp, then prefix-truncated keys —
-correctness of the *set* of timings is never sacrificed, only key length.
+present.  Full query names don't fit, so the ``queries`` keys are short keys
+whose assignment is FROZEN (VERDICT r9 #3): the committed ``BENCH_KEYS.json``
+(short -> full) is reused verbatim so keys never change meaning between
+rounds, new queries mint keys from the unused pool, and retired keys are
+never recycled.  Precision is uniform when it fits; otherwise whole seconds
+everywhere with the slowest cells upgraded to 2dp inside the byte budget
+(VERDICT r9 #7).  The full-fidelity record (full names, 4-decimal timings)
+goes to ``BENCH_DETAIL_c{cores}.json``, one per core count, so a run on one
+host does not overwrite another's record; per-query lines with full names
+also go to stderr.
 
 Notes:
-- A warm-up query runs first so JVM/codegen startup isn't billed to q1.
 - Each query is timed end-to-end (plan + execute + fetch), matching how the
   serving layer would pay for it.
 - ``SPARK_GRAFT_BENCH_REPEAT`` (default 2) re-runs each query and keeps the
@@ -37,76 +34,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 # Stdout budget for the final JSON line. The driver keeps the last 2000 bytes
 # of stdout; leave slack for the trailing newline and any stray runtime chatter.
 STDOUT_BUDGET = 1900
-
-# Deterministic token abbreviations for bench-line keys. Longest-token coverage
-# of the current registry; unknown tokens pass through unchanged. Keep entries
-# stable across rounds so BENCH_r{N}.json files stay comparable.
-ABBREV = {
-    "count": "cnt", "counts": "cnts", "revenue": "rev", "customer": "cust",
-    "customers": "custs", "window": "win", "windowed": "win", "windows": "wins",
-    "embedding": "emb", "embeddings": "embs", "distribution": "distr",
-    "purchase": "purch", "multimodal": "mm", "streaming": "strm",
-    "incremental": "incr", "percentiles": "pctls", "normalize": "norm",
-    "fingerprint": "fngr", "histogram": "hist", "retention": "retn",
-    "forecast": "fcst", "grouped": "grp", "grouping": "grpg",
-    "weighted": "wtd", "quantity": "qty", "priority": "prio",
-    "supplier": "supp", "training": "trn", "pipeline": "pipe",
-    "session": "sess", "sliding": "sld", "resample": "rsmp",
-    "stratified": "strat", "inactive": "inact", "distinct": "dist",
-    "approx": "apx", "aggregates": "aggs", "aggregate": "agg",
-    "filtered": "fltd", "latest": "last", "moving": "mov", "average": "avg",
-    "features": "feat", "nation": "ntn", "market": "mkt", "share": "shr",
-    "events": "evts", "event": "evt", "quality": "qual", "values": "vals",
-    "value": "val", "stats": "st", "orders": "ords", "order": "ord",
-    "wealthy": "wlth", "disjunctive": "disj", "clusters": "clust",
-    "profile": "prof", "tagged": "tag", "signup": "sgnp", "before": "bfr",
-    "users": "usrs", "user": "usr", "sample": "smp", "energy": "enrg",
-    "search": "srch", "volume": "vol", "change": "chg", "recent": "rcnt",
-    "region": "rgn", "summary": "summ", "total": "tot", "terms": "trm",
-    "spike": "spk", "salted": "salt", "pricing": "price", "pivot": "pvt",
-    "unpivot": "unpvt", "hourly": "hrly", "small": "sm", "large": "lg",
-    "brand": "brnd", "cohort": "coh", "type": "ty", "dedup": "dd",
-    "exact": "ex", "minhash": "mh", "simhash": "sh", "ngram": "ng",
-    "jaccard": "jac", "neardup": "nd", "cosine": "cos", "image": "img",
-    "audio": "aud", "frame": "frm", "running": "run", "zscore": "z",
-    "bucket": "bkt", "error": "err", "clicks": "clk", "click": "clk",
-    "decile": "dec", "history": "hst", "rollup": "rlp", "merge": "mrg",
-    "quantile": "qtl", "quantiles": "qtls", "weekly": "wkly", "daily": "dly",
-    "anomaly": "anom", "interval": "ivl", "overlap": "ovlp", "range": "rng",
-    "template": "tmpl", "document": "doc", "documents": "docs",
-    "shipping": "ship", "returns": "rtn", "returned": "rtn",
-    "secondary": "sec2", "global": "glb", "partition": "part",
-    "watermark": "wm", "dimension": "dim", "dimensions": "dims",
-    "entropy": "entr", "language": "lang", "detect": "det",
-    "similarity": "sim", "frequency": "freq", "vector": "vec",
-    "vectors": "vecs", "product": "prod", "products": "prods",
-    "weight": "wt", "weights": "wts", "median": "med", "funnel": "fnl",
-    "conversion": "conv", "attribution": "attr", "balance": "bal",
-    "inventory": "inv", "velocity": "velo", "lineitem": "li",
-    "supplier_part": "sp", "percent": "pct", "ratio": "ratio",
-}
-
-
-def short_name(name: str) -> str:
-    """Deterministic per-token abbreviation of a registry query name."""
-    return "_".join(ABBREV.get(tok, tok) for tok in name.split("_"))
-
-
-def _disambiguate(keys: list[str]) -> dict[str, str]:
-    """Map full names -> unique short names (suffix -2, -3... on collision)."""
-    out: dict[str, str] = {}
-    seen: dict[str, int] = {}
-    for k in keys:
-        s = short_name(k)
-        n = seen.get(s, 0)
-        seen[s] = n + 1
-        out[k] = s if n == 0 else f"{s}-{n + 1}"
-    return out
 
 
 def _load_frozen_keys() -> dict[str, str]:
@@ -144,7 +75,6 @@ def _stable_keymap(names: list[str], frozen: dict[str, str]) -> dict[str, str]:
     import string
 
     used = set(frozen.values())
-    out: dict[str, str] = {}
     alphabet = string.ascii_lowercase + string.digits
     width = max((len(k) for k in frozen.values()), default=2)
 
@@ -153,33 +83,23 @@ def _stable_keymap(names: list[str], frozen: dict[str, str]) -> dict[str, str]:
             for p in itertools.product(alphabet, repeat=w):
                 yield "".join(p)
 
-    pool = pool_gen()
-    for n in names:
-        if n in frozen:
-            out[n] = frozen[n]
-            continue
-        c = short_name(n)[:width]
-        if c in used:
-            c = next(p for p in pool if p not in used)
-        used.add(c)
-        out[n] = c
-    return out
+    pool = (p for p in pool_gen() if p not in used)
+    return {n: frozen[n] if n in frozen else next(pool) for n in names}
 
 
 def _fit_line(timings: dict[str, float], total: float, sf) -> tuple[str, dict[str, str]]:
     """Build the stdout JSON line under STDOUT_BUDGET bytes.
 
-    With a committed BENCH_KEYS.json the key assignment is frozen (stable
-    across rounds); precision is uniform if it fits, otherwise mixed — every
-    cell gets whole seconds and the slowest cells are upgraded to 2dp while
-    the byte budget allows (VERDICT r9 #7: integer-second quantization made
-    the 8-vs-32-core scaling probe unreadable for sub-second cells; spending
-    the slack on the heavy cells keeps the probe meaningful where it matters).
-    Without a frozen map it degrades as before: abbreviated keys at
-    3dp -> 2dp -> prefix-truncated keys. Returns (line, short->full mapping).
+    Keys come from :func:`_stable_keymap` (frozen across rounds). Precision
+    is uniform if it fits, otherwise mixed: every cell gets whole seconds
+    and the slowest cells are upgraded to 2dp while the byte budget allows
+    (VERDICT r9 #7: integer-second quantization made the 8-vs-32-core
+    scaling probe unreadable for sub-second cells; spending the slack on
+    the heavy cells keeps the probe meaningful where it matters). Returns
+    (line, short->full mapping).
     """
     names = sorted(timings)
-    frozen = _load_frozen_keys()
+    keymap = _stable_keymap(names, _load_frozen_keys())
 
     def _num(t: float, dp: int):
         """Minimal JSON number at dp decimals: 2.0 -> 2 (same parsed value,
@@ -187,127 +107,42 @@ def _fit_line(timings: dict[str, float], total: float, sf) -> tuple[str, dict[st
         v = round(t, dp)
         return int(v) if v == int(v) else v
 
-    def build_line(q: dict) -> str:
+    def build_line(dps: dict[str, int]) -> str:
         return json.dumps(
             {"metric": "total_query_sec", "value": round(total, 3),
-             "unit": "sec", "sf": sf, "queries": q},
+             "unit": "sec", "sf": sf,
+             "queries": {keymap[n]: _num(timings[n], dps[n]) for n in names}},
             separators=(",", ":"),
         )
 
-    if frozen:
-        keymap = _stable_keymap(names, frozen)
-        # Uniform precision first.
-        for dp in (3, 2, 1):
-            line = build_line({keymap[n]: _num(timings[n], dp) for n in names})
-            if len(line) <= STDOUT_BUDGET:
-                return line, {v: k for k, v in keymap.items()}
-        # Mixed precision: whole seconds everywhere, then upgrade the
-        # slowest cells to 2dp greedily while the budget allows.
-        dps = {n: 0 for n in names}
-        line = build_line({keymap[n]: _num(timings[n], dps[n]) for n in names})
+    mapping = {v: k for k, v in keymap.items()}
+    for dp in (3, 2, 1):
+        line = build_line(dict.fromkeys(names, dp))
         if len(line) <= STDOUT_BUDGET:
-            for n in sorted(names, key=lambda n: -timings[n]):
-                dps[n] = 2
-                cand = build_line(
-                    {keymap[m]: _num(timings[m], dps[m]) for m in names})
-                if len(cand) <= STDOUT_BUDGET:
-                    line = cand
-                else:
-                    dps[n] = 0
-            return line, {v: k for k, v in keymap.items()}
-        # Frozen keys cannot fit even at whole seconds (registry grew a
-        # lot): fall through to the legacy degradation path below.
-
-    mapping = _disambiguate(names)
-
-    def build(keymap: dict[str, str], dp: int) -> str:
-        q = {keymap[n]: _num(timings[n], dp) for n in names}
-        return json.dumps(
-            {"metric": "total_query_sec", "value": round(total, 3),
-             "unit": "sec", "sf": sf, "queries": q},
-            separators=(",", ":"),
-        )
-
-    for dp in (3, 2):
-        line = build(mapping, dp)
-        if len(line) <= STDOUT_BUDGET:
-            return line, {v: k for k, v in mapping.items()}
-
-    # Next: truncate short names to unique prefixes of shrinking length, at
-    # 2dp first, then 1dp, then whole seconds (BENCH_DETAIL.json keeps full
-    # names + 4dp always).
-    def _unique_trunc(width: int) -> dict[str, str]:
-        """Unique keys of at most ``width`` chars where possible: an
-        un-collided truncation keeps its natural (possibly shorter) form;
-        a collided one draws the next unused combo from a deterministic
-        base-36 pool of that width (growing a numeric suffix past the
-        width blew the byte budget the truncation existed to meet at 200
-        queries). Past 36^width names the pool chains to width+1 combos —
-        slightly over-width keys beat a crash. BENCH_KEYS.json records
-        the mapping either way."""
-        import itertools
-        import string
-
-        alphabet = string.ascii_lowercase + string.digits
-
-        def pool_gen():
-            for w in range(width, len(alphabet)):
-                for p in itertools.product(alphabet, repeat=w):
-                    yield "".join(p)
-
-        out: dict[str, str] = {}
-        used: set[str] = set()
-        pool = pool_gen()
-        for n in names:
-            c = short_name(n)[:width]
-            if c in used:
-                c = next(p for p in pool if p not in used)
-            used.add(c)
-            out[n] = c
-        return out
-
-    for dp in (2, 1, 0):
-        for width in (10, 8, 6, 5, 4, 3, 2, 1):
-            trunc = _unique_trunc(width)
-            line = build(trunc, dp)
-            if len(line) <= STDOUT_BUDGET:
-                return line, {v: k for k, v in trunc.items()}
-    # Thousands of queries: keep the slowest timings that fit (they are the
-    # ones worth reading in a truncated record; BENCH_DETAIL.json always has
-    # the full set) rather than emitting nothing.
-    trunc = _unique_trunc(2)
-    by_cost = sorted(names, key=lambda n: -timings[n])
-    keep: dict[str, str] = {}
-    line = json.dumps(
-        {"metric": "total_query_sec", "value": round(total, 3),
-         "unit": "sec", "sf": sf, "truncated": True, "queries": {}},
-        separators=(",", ":"),
-    )
-    for n in by_cost:
-        trial = dict(keep, **{n: trunc[n]})
-        cand = json.dumps(
-            {"metric": "total_query_sec", "value": round(total, 3),
-             "unit": "sec", "sf": sf, "truncated": True,
-             "queries": {trial[m]: round(timings[m], 1) for m in trial}},
-            separators=(",", ":"),
-        )
-        if len(cand) > STDOUT_BUDGET:
-            break
-        keep, line = trial, cand
-    return line, {v: k for k, v in keep.items()}
-
-
-def _force(df) -> int:
-    """Execute the full plan and materialize results (what a consumer pays)."""
-    return len(df.collect())
+            return line, mapping
+    # Mixed precision. A registry too large even for whole seconds returns
+    # an over-budget line, which test_bench_line_fits_driver_window catches.
+    dps = dict.fromkeys(names, 0)
+    line = build_line(dps)
+    if len(line) <= STDOUT_BUDGET:
+        for n in sorted(names, key=lambda n: -timings[n]):
+            dps[n] = 2
+            cand = build_line(dps)
+            if len(cand) <= STDOUT_BUDGET:
+                line = cand
+            else:
+                dps[n] = 0
+    return line, mapping
 
 
 def main() -> None:
     from kafkasparkstream_spark.session import get_spark
 
-    import __spark_entry__ as entrymod
+    from kafkasparkstream_spark.tables import DEFAULT_SF_DIR as sf_dir
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    import __spark_entry__ as entrymod
+    from perf import time_query, warm_up
+
     repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "2"))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
@@ -316,33 +151,14 @@ def main() -> None:
 
     spark = get_spark(app_name="kafkasparkstream-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, sf_dir)
 
     queries = entrymod.queries()
-
-    # Warm-up: touch every table once so first-timed query isn't billed for
-    # JVM classloading / parquet footer reads, and spin up the Python UDF
-    # worker pool so Arrow-kernel queries aren't billed for worker forks.
-    from kafkasparkstream_spark.tables import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        load_table(spark, t, sf_dir).count()
-    spark.range(64, numPartitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-
-    from kafkasparkstream_spark.util import query_scope
-
     timings: dict[str, float] = {}
     for name in sorted(queries):
-        best = None
-        for _ in range(repeat):
-            with query_scope(spark, name):  # frees the query's blocks, untimed
-                t0 = time.perf_counter()
-                n = _force(queries[name](spark, sf_dir))
-                dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 4)
-        print(f"# {name}: {best:.3f}s ({n} rows)", file=sys.stderr)
+        times, n = time_query(spark, name, queries[name], sf_dir, repeat)
+        timings[name] = round(min(times), 4)
+        print(f"# {name}: {min(times):.3f}s ({n} rows)", file=sys.stderr)
 
     total = sum(timings.values())
     line, key_map = _fit_line(timings, total, sf)
@@ -359,7 +175,8 @@ def main() -> None:
     except Exception:
         sha = None
     try:
-        with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
+        cpus = spark.sparkContext.defaultParallelism
+        with open(os.path.join(here, f"BENCH_DETAIL_c{cpus}.json"), "w") as f:
             json.dump(
                 {"metric": "total_query_sec", "value": round(total, 4),
                  "unit": "sec", "sf": sf, "git_sha": sha,

@@ -56,55 +56,5 @@ import pyspark.sql.pandas.serializers  # noqa: F401
 
 import pyspark.daemon as _daemon
 
-_PREWARMED = False
-
-
-def _prewarm() -> None:
-    """Once per WORKER process: touch a contiguous heap block so numpy's
-    large temporaries land on already-faulted pages.
-
-    Measured on this sandbox (gVisor): first-touch of freshly mapped
-    anonymous memory costs ~400 µs/page — an elementwise pass over a
-    1000×1000 float64 matrix (a few 8 MB temporaries) ran 3.5 s cold vs
-    17 ms once malloc reused pages (OPTIMIZATION_r09.md has the ladder).
-    A zeros()+fill() sweep takes the kernel's fast sequential-fault path
-    (~70 ms for 128 MB), after which — with MALLOC_TRIM_THRESHOLD_=-1
-    exported by session.get_spark so glibc never gives the pages back —
-    every later kernel allocation reuses warm pages. On a host without
-    the pathological fault cost this is ~30 ms once per worker, noise
-    against the tasks the worker exists to run.
-
-    Size via SPARK_GRAFT_WORKER_PREWARM_MB (default 128; 0 disables).
-    """
-    global _PREWARMED
-    if _PREWARMED:
-        return
-    _PREWARMED = True
-    mb = int(os.environ.get("SPARK_GRAFT_WORKER_PREWARM_MB", "0"))
-    if mb <= 0:
-        return
-    # 8 MiB blocks, held until all are touched, then freed together: each
-    # stays well under MALLOC_MMAP_THRESHOLD_ (128 MiB) so the pages come
-    # from (and on free return to) the brk heap — one big block would be
-    # mmap'd and unmapped again, warming nothing.
-    blocks = [numpy.zeros(1_048_576) for _ in range(max(1, mb // 8))]
-    for b in blocks:
-        b.fill(1.0)
-    del blocks
-
-
-_orig_worker_main = _daemon.worker_main
-
-
-def _warm_worker_main(infile, outfile):
-    _prewarm()
-    return _orig_worker_main(infile, outfile)
-
-
-# worker_main runs in the forked child (pyspark.daemon.worker), so the
-# prewarm executes once per worker process, before its first task, and a
-# reused worker never repeats it.
-_daemon.worker_main = _warm_worker_main
-
 if __name__ == "__main__":
     _daemon.manager()

@@ -116,8 +116,8 @@ def get_spark(
     # daemon → workers). Large numpy temporaries otherwise cycle through
     # mmap/munmap + trim, paying a first-touch page fault per 4 KiB on
     # every kernel invocation — measured at ~400 µs/page on this sandbox
-    # (3.5 s vs 17 ms for one elementwise pass over an 8 MB matrix; see
-    # pydaemon._prewarm). Keeping freed pages on the heap (TRIM -1) and
+    # (3.5 s vs 17 ms for one elementwise pass over an 8 MB matrix;
+    # OPTIMIZATION_r09.md). Keeping freed pages on the heap (TRIM -1) and
     # large blocks off mmap makes every kernel call after the first reuse
     # warm pages. Both are no-ops where faults are cheap, and the memory
     # held is bounded by each worker's real peak working set.

@@ -145,7 +145,6 @@ def start_pipeline(
     checkpoint_root: str,
     cfg: PipelineConfig | None = None,
     available_now: bool = False,
-    dedup_keys: tuple[str, ...] | None = None,
 ) -> tuple[StreamingQuery, StreamingQuery]:
     """Wire both output streams (processor.py:100-117 analog):
 
@@ -159,19 +158,9 @@ def start_pipeline(
     :data:`STATE_STORE_CAP` as their shuffle-partition count, rather than
     the session's count, which is restored once they have started; a
     restart keeps the count its checkpoint froze.
-
-    ``dedup_keys`` inserts :func:`dedup_stage` ahead of both branches,
-    dropping source re-deliveries of the same logical event. Opt-in (not
-    default) because the stateful dedup operator also discards
-    later-than-watermark rows, whereas the reference's contract (ST5,
-    pinned in tests) keeps late rows in the raw branch. Sink-side retry
-    idempotence needs no opt-in — the parquet sink replays batches into
-    per-batch partitions (see sinks.py).
     """
     cfg = cfg or PipelineConfig()
     parsed = parse_stage(raw_stream, cfg)
-    if dedup_keys is not None:
-        parsed = dedup_stage(parsed, keys=dedup_keys, cfg=cfg)
     parsed.createOrReplaceTempView("raw_sensor_data")  # processor.py:79 analog
     agg = windowed_aggregate_stage(parsed, cfg)
 

@@ -31,8 +31,8 @@ def main() -> None:
     from pyspark.sql.streaming import StreamingQueryListener
 
     from kafkasparkstream_spark.session import get_spark
-    from kafkasparkstream_spark.util import query_scope
     import __spark_entry__ as E
+    from perf import time_query, warm_up
 
     names = sys.argv[1:] or DEFAULT
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -55,23 +55,16 @@ def main() -> None:
     spark = get_spark(app_name="stream-trigger-audit")
     spark.sparkContext.setLogLevel("ERROR")
     spark.streams.addListener(Collector())
-    from kafkasparkstream_spark.tables import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        load_table(spark, t, sf_dir).count()
+    warm_up(spark, sf_dir)
 
     out = {}
     for name in names:
         q = E.queries()[name]
         # warm run: plan compile + python worker pool, not billed
-        with query_scope(spark, name):
-            q(spark, sf_dir).collect()
+        time_query(spark, name, q, sf_dir, 1)
         time.sleep(2.0)  # drain the warm run's ASYNC listener events first,
         progresses.clear()  # or they bleed into the timed window
-        with query_scope(spark, name):
-            t0 = time.perf_counter()
-            n = len(q(spark, sf_dir).collect())
-            wall = time.perf_counter() - t0
+        (wall,), n = time_query(spark, name, q, sf_dir, 1)
         time.sleep(2.0)  # listener events are async
         batches = list(progresses)  # every trigger counts, incl. 0-input ones
         trig = sum(p["durationMs"].get("triggerExecution", 0) for p in batches)

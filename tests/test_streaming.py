@@ -961,30 +961,6 @@ def test_interval_join_state_survives_restart(spark, tmp_path):
     assert got == {(200, 100), (201, None)}
 
 
-def test_stream_throughput_harness_verifies_state(spark):
-    """The throughput artifact's correctness gate is load-bearing: run the
-    harness's micro-batch mode at sf0.001 and require the
-    verified-vs-batch-shadow flag (a throughput number for a wrong answer
-    must never be recorded)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "stream_throughput",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "scripts", "stream_throughput.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from kafkasparkstream_spark.tables import load_table
-
-    events = load_table(spark, "events", "/root/testdata/sf0.001")
-    r = mod.run_mode(spark, events, "microbatch", n_files=4)
-    assert r["verified_vs_batch_shadow"] and r["events"] == events.count()
-    assert r["micro_batches"] >= 4
-
-
 def test_transform_with_state_matches_apply_in_pandas_with_state(spark, tmp_path):
     """Spark 4's transformWithStateInPandas twin must reproduce the
     applyInPandasWithState accumulator's final state exactly across the
