@@ -1,5 +1,6 @@
 """Structured Streaming replays over a byte-identical file-JSON
-wire: windowed aggs, upserts, stream-stream joins, dedup, recovery."""
+wire: windowed aggs, cross-batch refinements, stream-stream joins, dedup,
+recovery."""
 
 from __future__ import annotations
 
@@ -24,6 +25,10 @@ from kafkasparkstream_spark.queries._shared import (  # noqa: E402
 )
 from kafkasparkstream_spark.streaming.pipeline import (  # noqa: E402
     clamped_shuffle_partitions,
+)
+from kafkasparkstream_spark.streaming.sinks import (  # noqa: E402
+    foreach_batch_parquet_sink,
+    latest_state,
 )
 
 EVENT_WIRE_SCHEMA = StructType(
@@ -170,6 +175,34 @@ def _events_to_wire(events: DataFrame, path: str, n_files: int | None = None) ->
     wire.write.mode("overwrite").text(path)
 
 
+def _replay(
+    df: DataFrame, workdir: str, mode: str, rows: int | None = None
+) -> DataFrame:
+    """Run the streaming ``df`` as one bounded ``availableNow`` replay and
+    return its sink read back.
+
+    The query writes each micro-batch through
+    :func:`foreach_batch_parquet_sink` to ``{workdir}/sink`` in output
+    ``mode``, with a fresh checkpoint at ``{workdir}/ckpt``, and starts and
+    runs inside :func:`clamped_shuffle_partitions` (see there for ``rows``).
+    A failed batch write fails the query: under ST7's swallow-and-log it
+    would leave a stale sink that surfaces only as an oracle mismatch."""
+    spark = df.sparkSession
+    sink = f"{workdir}/sink"
+    with clamped_shuffle_partitions(spark, rows=rows):
+        q = (
+            df.writeStream.foreachBatch(
+                foreach_batch_parquet_sink(sink, swallow_errors=False)
+            )
+            .outputMode(mode)
+            .option("checkpointLocation", f"{workdir}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.read.parquet(sink)
+
+
 @register(
     "streaming_windowed_agg",
     oracle="""
@@ -191,11 +224,8 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark → 1-min tumbling agg → update-mode foreachBatch parquet sink →
     latest-state read. Single availableNow batch keeps watermark drops out so
     the final state equals the batch answer exactly."""
-    import tempfile
-
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import PipelineConfig, start_pipeline
-    from kafkasparkstream_spark.streaming.sinks import latest_state
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_stream_")
@@ -248,33 +278,34 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_upsert_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST3's production fix, executed for real: the same 1-minute continuous
-    query as ``streaming_windowed_agg``, but update-mode refinements land
-    through the manifest-swap UPSERT sink
-    (`streaming/sinks.py:foreach_batch_upsert_sink`) — a key's refinement
-    REPLACES its stored row, so the STORED table itself is duplicate-free
-    and is returned directly, with NO ``latest_state`` read-side
-    resolution. The reference appends update-mode batches blindly and
-    serves duplicates (processor.py:105,133); this is the
-    Delta/Iceberg-MERGE-shaped fix as a storage property, hash-checked
-    against the batch oracle."""
-    import tempfile
-
+    """ST3's update-mode refinements resolved across micro-batches: the
+    same 1-minute continuous query as ``streaming_windowed_agg``, replayed
+    as TWO micro-batches in event-time order. The events before the
+    midpoint of the event-time range go to one wire file, the rest are
+    appended as a second, and the stream reads one file per trigger. A
+    window that straddles the midpoint is emitted by both batches, and
+    ``latest_state`` keeps its row from the higher batch id. Every row of
+    the second file is later than the first batch's max event time, so
+    none is behind its watermark and the resolved state equals the batch
+    oracle. The reference appends update-mode batches blindly and serves
+    the duplicates (processor.py:105,133)."""
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import (
         PipelineConfig,
         parse_stage,
         windowed_aggregate_stage,
     )
-    from kafkasparkstream_spark.streaming.sinks import (
-        foreach_batch_upsert_sink,
-        read_upsert_table,
-    )
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_upsert_")
-    src, tbl, ckpt = f"{workdir}/src", f"{workdir}/tbl", f"{workdir}/ckpt"
-    _events_to_wire(events, src)
+    src = f"{workdir}/src"
+    ts_us = F.unix_micros("ts")
+    lo, hi = events.agg(F.min(ts_us), F.max(ts_us)).first()
+    mid = (lo + hi) // 2
+    # One file per write: the file source feeds files oldest first, so the
+    # early half is batch 0 and the later write batch 1.
+    for part, mode in ((ts_us < mid, "overwrite"), (ts_us >= mid, "append")):
+        _wire_projection(events.filter(part)).repartition(1).write.mode(mode).text(src)
 
     cfg = PipelineConfig(
         dims=("event_type",),
@@ -283,26 +314,9 @@ def streaming_upsert_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         battery_col=None,
         schema=EVENT_WIRE_SCHEMA,
     )
-    raw = file_json_stream(spark, src, max_files_per_trigger=None)
-    keys = ("window_start", "window_end", "event_type")
-    with clamped_shuffle_partitions(spark):
-        q = (
-            windowed_aggregate_stage(parse_stage(raw, cfg), cfg)
-            # swallow_errors=False: ST7 isolation is right for the
-            # reference-parity sinks, but THIS is an oracle-verified
-            # registry query — a swallowed batch failure would surface as
-            # a silently stale table (or a baffling missing-manifest read
-            # error), not as the real exception.
-            .writeStream.foreachBatch(
-                foreach_batch_upsert_sink(tbl, keys, swallow_errors=False)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return read_upsert_table(spark, tbl).select(
+    raw = file_json_stream(spark, src, max_files_per_trigger=1)
+    sink = _replay(windowed_aggregate_stage(parse_stage(raw, cfg), cfg), workdir, "update")
+    return latest_state(sink, ("window_start", "window_end", "event_type")).select(
         "window_start",
         "window_end",
         "event_type",
@@ -333,41 +347,25 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the one-pass batch aggregate — cross-batch state continuity is
     exactly what this checks (a state loss between batch 1 and 2 halves
     the counts)."""
-    import tempfile
-
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
-    from kafkasparkstream_spark.streaming.sinks import (
-        foreach_batch_parquet_sink,
-        latest_state,
-    )
     from kafkasparkstream_spark.streaming.stateful import running_user_totals
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_state_")
-    src, sink, ckpt = f"{workdir}/src", f"{workdir}/sink", f"{workdir}/ckpt"
+    src = f"{workdir}/src"
     _events_to_wire(events, src, n_files=2)
 
     raw = file_json_stream(spark, src, max_files_per_trigger=1)
     parsed = parse_json_events(raw, EVENT_WIRE_SCHEMA, ts_col="ts")
     totals = running_user_totals(parsed)
 
-    # Fresh checkpoint per run. Unlike the JVM-state replays, this one
-    # passes rows= so a large replay keeps the session's full shuffle
-    # width: applyInPandasWithState is Arrow/Python-throughput-bound per
-    # partition (see clamped_shuffle_partitions).
-    with clamped_shuffle_partitions(spark, rows=events.count()):
-        q = (
-            totals.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .queryName("running_totals")
-            .start()
-        )
-        q.awaitTermination()
-
-    final = latest_state(spark.read.parquet(sink), ("user_id",))
+    # Unlike the JVM-state replays, this one passes rows= so a large replay
+    # keeps the session's full shuffle width: applyInPandasWithState is
+    # Arrow/Python-throughput-bound per partition (see
+    # clamped_shuffle_partitions).
+    sink = _replay(totals, workdir, "update", rows=events.count())
+    final = latest_state(sink, ("user_id",))
     return final.select("user_id", "n_events", "sum_value").orderBy("user_id")
 
 
@@ -398,12 +396,9 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (state ≈ arrival rate × (watermark + interval) per side), so the same
     plan runs unbounded at production scale.
     """
-    import tempfile
-
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import stream_interval_join
-    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_ssjoin_")
@@ -429,19 +424,8 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.ts").alias("click_ts"),
     )
 
-    sink, ckpt = f"{workdir}/sink", f"{workdir}/ckpt"
-    with clamped_shuffle_partitions(spark):
-        q = (
-            pairs.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     return (
-        spark.read.parquet(sink)
+        _replay(pairs, workdir, "append")
         .groupBy("event_id")
         .agg(F.count(F.lit(1)).alias("n_clicks_1h"))
         .orderBy("event_id")
@@ -489,15 +473,12 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial states instead of re-reading events; state per user is bounded
     by the session gap × watermark horizon.
     """
-    import tempfile
-
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
-    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_sesswin_")
-    src, sink, ckpt = f"{workdir}/src", f"{workdir}/sink", f"{workdir}/ckpt"
+    src = f"{workdir}/src"
     _wire_with_flush_sentinel(events, src)
 
     raw = file_json_stream(spark, src, max_files_per_trigger=None)
@@ -520,19 +501,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    with clamped_shuffle_partitions(spark):
-        q = (
-            sessions.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .queryName("session_windows")
-            .start()
-        )
-        q.awaitTermination()
-
     return (
-        spark.read.parquet(sink)
+        _replay(sessions, workdir, "append")
         .filter(F.col("user_id") >= 0)
         .select(
             "user_id",
@@ -573,15 +543,12 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark so the bounded replay flushes; its own window never passes
     the watermark, so it self-excludes from append output.
     """
-    import tempfile
-
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
-    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_chain_")
-    src, sink, ckpt = f"{workdir}/src", f"{workdir}/sink", f"{workdir}/ckpt"
+    src = f"{workdir}/src"
     _wire_with_flush_sentinel(events, src)
 
     raw = file_json_stream(spark, src, max_files_per_trigger=None)
@@ -602,18 +569,8 @@ def streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w5.start").alias("window_start"), "n_events", "_sum_c")
     )
 
-    with clamped_shuffle_partitions(spark):
-        q = (
-            coarse.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     return (
-        spark.read.parquet(sink)
+        _replay(coarse, workdir, "append")
         .select(
             "window_start",
             F.col("n_events").cast("long").alias("n_events"),
@@ -647,16 +604,13 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the append sink must hash-match the batch join. No streaming
     state at all — the join is per-batch, which is why it scales to any
     stream rate."""
-    import tempfile
-
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import enrich_stage
-    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_enrich_")
-    src, sink, ckpt = f"{workdir}/src", f"{workdir}/sink", f"{workdir}/ckpt"
+    src = f"{workdir}/src"
     _events_to_wire(events, src)
 
     dim = spark.createDataFrame(
@@ -680,18 +634,8 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("category", "value", "weight")
     )
 
-    with clamped_shuffle_partitions(spark):
-        q = (
-            enriched.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     return (
-        spark.read.parquet(sink)
+        _replay(enriched, workdir, "append")
         .groupBy("category")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -719,16 +663,13 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles on replay, SURVEY.md ST3), hash-verified rather than asserted
     on a toy fixture. Dedup keys on (event_id, ts): state is one entry per
     in-horizon event, evicted as the watermark passes."""
-    import tempfile
-
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import PipelineConfig, dedup_stage
-    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_ddr_")
-    src, sink, ckpt = f"{workdir}/src", f"{workdir}/sink", f"{workdir}/ckpt"
+    src = f"{workdir}/src"
     doubled = events.unionByName(events)  # the re-delivered topic
     _events_to_wire(doubled, src)
 
@@ -737,18 +678,8 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = PipelineConfig(ts_col="ts")
     deduped = dedup_stage(parsed, keys=("event_id", "ts"), cfg=cfg)
 
-    with clamped_shuffle_partitions(spark):
-        q = (
-            deduped.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     return (
-        spark.read.parquet(sink)
+        _replay(deduped, workdir, "append")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .orderBy("event_type")
@@ -788,12 +719,9 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     + interval) per side); the outer side adds only the per-row "matched"
     bit. The sentinel key (-1) pairs with its twin and is filtered on read.
     """
-    import tempfile
-
     from kafkasparkstream_spark.sources.json_parse import parse_json_events
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import stream_interval_join
-    from kafkasparkstream_spark.streaming.sinks import foreach_batch_parquet_sink
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_lojoin_")
@@ -828,19 +756,8 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("error_id"),
     )
 
-    sink, ckpt = f"{workdir}/sink", f"{workdir}/ckpt"
-    with clamped_shuffle_partitions(spark):
-        q = (
-            pairs.writeStream.foreachBatch(foreach_batch_parquet_sink(sink))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     return (
-        spark.read.parquet(sink)
+        _replay(pairs, workdir, "append")
         .filter(F.col("user_id") >= 0)
         .groupBy("user_id")
         .agg(
@@ -878,11 +795,8 @@ def streaming_batch_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one query: at 100 TB you run exactly this to certify a streaming
     sink's backfill against the batch path, and both sides here are the
     engine's own operators (no driver-side comparison)."""
-    import tempfile
-
     from kafkasparkstream_spark.sources.streams import file_json_stream
     from kafkasparkstream_spark.streaming.pipeline import PipelineConfig, start_pipeline
-    from kafkasparkstream_spark.streaming.sinks import latest_state
 
     events = load_table(spark, "events", sf_dir)
     workdir = _stream_workdir("kss_parity_")

@@ -9,7 +9,8 @@ Spark-first re-expression of the reference's streaming job
        duplicate-append caveat and the idempotent fix
 - ST4  append-mode raw stream (processor.py:110-117)
 - S4   per-query checkpoint locations (processor.py:106,116)
-- S5   awaitAnyTermination (processor.py:122)
+- S5   awaitAnyTermination (processor.py:122): callers wait on
+       ``spark.streams.awaitAnyTermination()`` directly
 
 Scale notes: the streaming aggregate's state is partitioned by the group key
 (window × dims) across as many state stores as the cluster has cores, at most
@@ -183,14 +184,6 @@ def start_pipeline(
         agg_q = _start(agg, "sensor_aggregates", "update")
         raw_q = _start(parsed, "sensor_data", "append")
     return agg_q, raw_q
-
-
-def await_any_termination(spark: SparkSession, timeout: int | None = None) -> None:
-    """S5 (processor.py:122)."""
-    if timeout is None:
-        spark.streams.awaitAnyTermination()
-    else:
-        spark.streams.awaitAnyTermination(timeout)
 
 
 def dedup_stage(

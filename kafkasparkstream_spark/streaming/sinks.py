@@ -93,9 +93,9 @@ def foreach_batch_parquet_sink(
 
 def latest_state(df: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:
     """Resolve update-mode duplicate appends: keep the row with the highest
-    ``_batch_id`` per key (ties broken arbitrarily-but-deterministically by
-    the max over remaining columns is unnecessary — a key appears at most
-    once per micro-batch). One window-rank pass, shuffled on the key."""
+    ``_batch_id`` per key. In update mode a key appears at most once per
+    micro-batch, so that row is unique and no tie-break is needed. One
+    window-rank pass, shuffled on the key."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(*key_cols).orderBy(F.desc("_batch_id"))
@@ -130,188 +130,3 @@ def foreach_batch_jdbc_sink(
         batch_df.write.jdbc(url, table, mode="append", properties=properties or {})
 
     return _batch_sink(_write, f"jdbc {table}", skip_empty, swallow_errors)
-
-
-def foreach_batch_upsert_sink(
-    path: str,
-    key_cols: tuple[str, ...],
-    num_buckets: int = 16,
-    skip_empty: bool = True,
-    swallow_errors: bool = True,
-) -> BatchSink:
-    """Upsert-capable micro-batch sink: a key's refinement REPLACES its
-    stored row, so the table itself is duplicate-free — ST3's production
-    fix (SURVEY.md §2.9-ST3) as a storage property instead of the
-    ``latest_state`` read-path convention.
-
-    This is the parquet manifest-swap pattern (a minimal Delta/Iceberg
-    MERGE equivalent, executable without lakehouse jars):
-
-    - **Layout**: ``{path}/data/v{batch_id}/_kb={bucket}/part-*.parquet``
-      where ``_kb = pmod(xxhash64(*key_cols), num_buckets)``;
-      ``{path}/_manifest.json`` maps each bucket to its CURRENT version
-      directory and carries the table schema.
-    - **Per batch**: read only the AFFECTED buckets via the manifest
-      (partition-pruned merge scope), anti-join stored rows against the
-      batch's keys, union the batch rows, write the merged buckets to the
-      new version dir in ONE distributed job, then atomically swap the
-      manifest (tmp + ``os.replace``). Readers (:func:`read_upsert_table`)
-      always see a complete consistent version set.
-    - **Crash/retry**: a version dir that the manifest references is NEVER
-      written again — a checkpoint replay of an already-swapped batch picks
-      a fresh attempt-suffixed dir (``v{batch_id}a1``, ...), regenerates
-      the same merged content from the current manifest, and swaps. So a
-      crash at ANY point leaves the referenced dirs intact and the old
-      manifest valid, and a replay converges to the identical row set —
-      idempotent, proven by test.
-
-    Scale: merge cost is proportional to the affected buckets, not the
-    table (size ``num_buckets`` so a bucket ≈ a healthy task's worth of
-    rows at target scale). The driver only touches the ≤``num_buckets``
-    bucket ids and a tiny JSON manifest. On a real lakehouse the same
-    callback body becomes ``MERGE INTO`` keyed on ``key_cols`` — this sink
-    exists so retry-idempotence is testable END-TO-END here; the manifest
-    swap is atomic on POSIX/HDFS renames (object stores need the
-    lakehouse log protocol instead, which is exactly what Delta provides).
-    """
-    import json
-    import os
-
-    keys = list(key_cols)
-
-    def _bucket(df: DataFrame):
-        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets))
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        # Three actions (affected-bucket collect, anti-join probe, final
-        # write) share the batch that _batch_sink persisted.
-        spark = batch_df.sparkSession
-        man_path = os.path.join(path, "_manifest.json")
-        try:
-            with open(man_path) as f:
-                manifest = json.load(f)
-        except (OSError, ValueError):
-            manifest = {"buckets": {}, "schema": None}
-
-        if manifest["schema"] is not None:
-            # Schema-on-write enforcement (the lakehouse contract): a
-            # batch whose columns drift from the table would otherwise
-            # land silently in fresh buckets and poison the manifest.
-            from pyspark.sql.types import StructType
-
-            stored = StructType.fromJson(json.loads(manifest["schema"]))
-            sig = lambda st: [(f.name, f.dataType.simpleString()) for f in st]  # noqa: E731
-            if sig(batch_df.schema) != sig(stored):
-                raise ValueError(
-                    f"upsert schema mismatch at {path}: batch "
-                    f"{sig(batch_df.schema)} != table {sig(stored)}"
-                )
-        new = batch_df.withColumn("_kb", _bucket(batch_df))
-        affected = sorted(
-            r["_kb"] for r in new.select("_kb").distinct().collect()
-        )
-        # Never rewrite a dir the manifest references (crash safety +
-        # no read-from-overwritten-path): replays of an already-swapped
-        # batch take the next attempt suffix.
-        referenced = set(manifest["buckets"].values())
-        ver, attempt = f"v{batch_id}", 0
-        while ver in referenced:
-            attempt += 1
-            ver = f"v{batch_id}a{attempt}"
-        old_dirs = {
-            b: os.path.join(path, "data", manifest["buckets"][str(b)], f"_kb={b}")
-            for b in affected
-            if str(b) in manifest["buckets"]
-        }
-        merged = new
-        if old_dirs:
-            old = spark.read.schema(batch_df.schema).parquet(*old_dirs.values())
-            keep = old.join(new.select(*keys).distinct(), keys, "left_anti")
-            merged = keep.withColumn("_kb", _bucket(keep)).unionByName(new)
-        (
-            merged.repartition("_kb")
-            .write.mode("overwrite")
-            .partitionBy("_kb")
-            .parquet(os.path.join(path, "data", ver))
-        )
-        for b in affected:
-            manifest["buckets"][str(b)] = ver
-        manifest["schema"] = batch_df.schema.json()
-        tmp = man_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, man_path)  # atomic: readers see old or new, never mixed
-
-    return _batch_sink(_write, f"upsert {path}", skip_empty, swallow_errors)
-
-
-def read_upsert_table(spark, path: str, schema: "StructType | str | None" = None) -> DataFrame:
-    """Read the current snapshot of a :func:`foreach_batch_upsert_sink`
-    table: the manifest names exactly one version dir per bucket, so the
-    union of those dirs IS the table — duplicate-free by construction, no
-    ``latest_state`` pass needed.
-
-    A table whose stream never committed a batch (empty source +
-    ``skip_empty``, or the query never ran) has no manifest yet: with a
-    ``schema`` supplied this returns an empty DataFrame of that schema;
-    without one it raises a descriptive error naming the sink path and
-    the no-batches-written cause rather than a bare FileNotFoundError."""
-    import json
-    import os
-
-    from pyspark.sql.types import StructType
-
-    manifest_path = os.path.join(path, "_manifest.json")
-    try:
-        with open(manifest_path) as f:
-            manifest = json.load(f)
-    except FileNotFoundError:
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        raise FileNotFoundError(
-            f"upsert table at {path!r} has no manifest ({manifest_path!r}): "
-            "no micro-batch has committed yet (empty source with skip_empty, "
-            "or the stream never ran). Pass schema= to read it as empty."
-        ) from None
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    dirs = [
-        os.path.join(path, "data", ver, f"_kb={b}")
-        for b, ver in sorted(manifest["buckets"].items())
-    ]
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
-
-
-def vacuum_upsert_table(path: str) -> list[str]:
-    """Delete version directories no longer referenced by the manifest and
-    return their names.
-
-    MUST be serialized with the writer — run it from the foreachBatch
-    callback itself (e.g. every N batches, after the manifest swap) or
-    while no streaming query is writing this table. It is NOT safe as an
-    unsynchronized background job: an in-flight batch writes its new
-    version dir BEFORE the manifest swap references it, so a concurrent
-    vacuum in that window would see the dir as unreferenced, delete it,
-    and the subsequent swap would publish a manifest pointing at a
-    deleted directory (this is what Delta's retention window + lakehouse
-    log exist to prevent; this minimal sink keeps only the current
-    snapshot and has no such window). Under the serialized model every
-    unreferenced dir really is garbage — a crashed attempt or a
-    superseded version — and deleting it never races the swap."""
-    import json
-    import os
-    import shutil
-
-    data = os.path.join(path, "data")
-    try:
-        with open(os.path.join(path, "_manifest.json")) as f:
-            referenced = set(json.load(f)["buckets"].values())
-    except (OSError, ValueError):
-        return []
-    removed = []
-    for ver in sorted(os.listdir(data)) if os.path.isdir(data) else []:
-        if ver not in referenced:
-            shutil.rmtree(os.path.join(data, ver), ignore_errors=True)
-            removed.append(ver)
-    return removed

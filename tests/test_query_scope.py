@@ -120,3 +120,15 @@ def test_every_persist_and_checkpoint_goes_through_the_scope():
         if raw.search(line)
     ]
     assert not hits, "raw persist/checkpoint calls bypass query_scope:\n" + "\n".join(hits)
+
+
+def test_every_registry_replay_runs_through_one_helper():
+    """One way to land a bounded streaming replay: the ``availableNow``
+    trigger appears once in the streaming registry module, inside
+    ``_replay``, which owns the sink, checkpoint, clamp and wait."""
+    path = PKG / "queries" / "streaming.py"
+    lines = path.read_text().splitlines()
+    hits = [i for i, line in enumerate(lines) if "trigger(availableNow=True)" in line]
+    assert len(hits) == 1, f"{len(hits)} availableNow triggers in {path.name}: {hits}"
+    defs = [i for i, line in enumerate(lines[: hits[0]]) if line.startswith("def ")]
+    assert defs and lines[defs[-1]].startswith("def _replay(")

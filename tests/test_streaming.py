@@ -1103,194 +1103,56 @@ def test_jdbc_sink_real_roundtrip_embedded_derby(spark, tmp_path):
     assert spark.read.jdbc(url, "sensor_data", properties=props).count() == 4
 
 
-def test_upsert_sink_stored_table_is_duplicate_free(spark, tmp_path):
-    """ST3 production fix, executable: update-mode refinements REPLACE their
-    stored row via the manifest-swap upsert sink, so the table itself —
-    no latest_state read — is duplicate-free and equals the batch shadow."""
-    from kafkasparkstream_spark.streaming.sinks import (
-        foreach_batch_upsert_sink,
-        read_upsert_table,
+def test_replay_fails_loudly_on_sink_write_error(spark, monkeypatch):
+    """A registry replay whose batch write fails raises that error. Under
+    ST7's swallow-and-log the query would finish on a stale sink and the
+    failure would surface only as an oracle hash mismatch (or, on a first
+    batch, as a missing sink path)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kafkasparkstream_spark import queries as Q
+    from tests.conftest import SF_SMOKE
+
+    def _fail(self, path, *args, **kwargs):
+        raise RuntimeError(f"injected sink write failure at {path}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", _fail)
+    with pytest.raises(Exception, match="injected sink write failure"):
+        Q.QUERIES["streaming_enrich_join"](spark, SF_SMOKE).collect()
+    assert not spark.streams.active
+
+
+def test_upsert_agg_replays_two_batches_without_watermark_drops(spark, monkeypatch):
+    """``streaming_upsert_agg`` refines windows across micro-batches: its
+    replay commits two non-empty batches (the halves of the event-time
+    range, in order), and the watermark drops no row, so the refinements
+    that ``latest_state`` resolves carry every event."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from kafkasparkstream_spark import queries as Q
+    from kafkasparkstream_spark.tables import load_table
+    from tests.conftest import SF_CORRECT
+
+    started = []
+    start = DataStreamWriter.start
+
+    def _start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", _start)
+    out = Q.QUERIES["streaming_upsert_agg"](spark, SF_CORRECT)
+    (q,) = started
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    fed = [p["numInputRows"] for p in progress if p["numInputRows"]]
+    n_events = load_table(spark, "events", SF_CORRECT).count()
+    assert len(fed) == 2 and sum(fed) == n_events
+    assert all(
+        op["numRowsDroppedByWatermark"] == 0
+        for p in progress
+        for op in p["stateOperators"]
     )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    # Batch 1 and batch 2 both hit window 10:00/temperature/room1 → the
-    # second micro-batch refines the first's row (count 1 → 2).
-    (src / "b1.json").write_text(ONTIME[0] + "\n")
-    (src / "b2.json").write_text("\n".join(ONTIME[1:]) + "\n")
-
-    cfg = PipelineConfig()
-    keys = ("window_start", "window_end", "device_type", "location")
-    tbl = str(tmp_path / "agg_upsert")
-    raw = file_json_stream(spark, str(src), max_files_per_trigger=1)
-    q = (
-        windowed_aggregate_stage(parse_stage(raw, cfg), cfg)
-        .writeStream.foreachBatch(foreach_batch_upsert_sink(tbl, keys))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    stored = read_upsert_table(spark, tbl)
-    assert stored.groupBy(*keys).count().filter("count > 1").count() == 0
-    refined = stored.filter(
-        "device_type = 'temperature' AND location = 'room1' "
-        "AND window_start = timestamp'2024-01-01 10:00:00'"
-    ).collect()
-    assert len(refined) == 1 and refined[0]["reading_count"] == 2
-
-    batch_shadow = windowed_aggregate_stage(
-        parse_stage(
-            spark.read.text(str(src))
-            .withColumnRenamed("value", "v")
-            .selectExpr("CAST(v AS BINARY) AS value"),
-            cfg,
-        ),
-        cfg,
-    )
-    assert stored.exceptAll(batch_shadow).count() == 0
-    assert batch_shadow.exceptAll(stored).count() == 0
-
-
-def test_upsert_sink_replay_and_crash_are_idempotent(spark, tmp_path):
-    """A checkpoint replay of an already-swapped batch (same batch_id) must
-    converge to the identical row set via a FRESH attempt dir — and a
-    'crash' that leaves a stale unreferenced version dir must not corrupt
-    reads. Also ST8 (empty batch leaves no trace) and ST7 isolation."""
-    import os
-
-    from kafkasparkstream_spark.streaming.sinks import (
-        foreach_batch_upsert_sink,
-        read_upsert_table,
-    )
-
-    tbl = str(tmp_path / "tbl")
-    sink = foreach_batch_upsert_sink(tbl, ("k",), num_buckets=4)
-    b0 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    sink(b0, 0)
-    sink(b0, 0)  # replay after completed swap
-    assert sorted((r["k"], r["v"]) for r in read_upsert_table(spark, tbl).collect()) == [
-        (1, "a"),
-        (2, "b"),
-    ]
-    # refinement batch replaces k=1, adds k=3; replayed twice as well
-    b1 = spark.createDataFrame([(1, "a2"), (3, "c")], ["k", "v"])
-    sink(b1, 1)
-    sink(b1, 1)
-    got = sorted((r["k"], r["v"]) for r in read_upsert_table(spark, tbl).collect())
-    assert got == [(1, "a2"), (2, "b"), (3, "c")]
-    # crash simulation: an orphan version dir (written, never swapped in)
-    # is invisible to readers.
-    os.makedirs(os.path.join(tbl, "data", "v99", "_kb=0"), exist_ok=True)
-    assert sorted(
-        (r["k"], r["v"]) for r in read_upsert_table(spark, tbl).collect()
-    ) == got
-    # ST8: empty batch is a no-op (manifest untouched).
-    before = open(os.path.join(tbl, "_manifest.json")).read()
-    sink(b1.filter("k < 0"), 2)
-    assert open(os.path.join(tbl, "_manifest.json")).read() == before
-    # ST7: a failing merge (schema mismatch vs stored buckets) isolates.
-    bad = spark.createDataFrame([("x",)], ["wrong"])
-    foreach_batch_upsert_sink(tbl, ("wrong",), num_buckets=4)(bad, 3)
-    assert sorted(
-        (r["k"], r["v"]) for r in read_upsert_table(spark, tbl).collect()
-    ) == got
-
-
-def test_upsert_vacuum_removes_only_unreferenced_versions(spark, tmp_path):
-    """Vacuum deletes superseded/orphaned version dirs, never a referenced
-    one; reads are identical before and after."""
-    import os
-
-    from kafkasparkstream_spark.streaming.sinks import (
-        foreach_batch_upsert_sink,
-        read_upsert_table,
-        vacuum_upsert_table,
-    )
-
-    tbl = str(tmp_path / "tbl")
-    sink = foreach_batch_upsert_sink(tbl, ("k",), num_buckets=2)
-    sink(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), 0)
-    sink(spark.createDataFrame([(1, "a2")], ["k", "v"]), 1)  # supersedes k=1's bucket in v0
-    os.makedirs(os.path.join(tbl, "data", "v99", "_kb=0"), exist_ok=True)  # crash orphan
-    before = sorted(map(tuple, read_upsert_table(spark, tbl).collect()))
-    removed = vacuum_upsert_table(tbl)
-    assert "v99" in removed
-    assert sorted(map(tuple, read_upsert_table(spark, tbl).collect())) == before
-    # every remaining dir is referenced
-    import json
-
-    refs = set(json.load(open(os.path.join(tbl, "_manifest.json")))["buckets"].values())
-    assert set(os.listdir(os.path.join(tbl, "data"))) == refs
-
-
-def test_upsert_vacuum_under_replay_convergence(spark, tmp_path):
-    """Vacuum interleaved with checkpoint replay (the serialized-writer
-    contract, sinks.py vacuum docstring): a vacuum between a completed
-    swap and that batch's replay never breaks read_upsert_table, and the
-    replay re-converges to the identical row set — vacuum only ever
-    removes dirs no manifest references, replay writes a fresh attempt
-    dir, so the two operations commute."""
-    import json
-    import os
-
-    from kafkasparkstream_spark.streaming.sinks import (
-        foreach_batch_upsert_sink,
-        read_upsert_table,
-        vacuum_upsert_table,
-    )
-
-    tbl = str(tmp_path / "tbl")
-    sink = foreach_batch_upsert_sink(tbl, ("k",), num_buckets=2)
-    sink(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), 0)
-    b1 = spark.createDataFrame([(1, "a2"), (3, "c")], ["k", "v"])
-    sink(b1, 1)
-    want = [(1, "a2"), (2, "b"), (3, "c")]
-
-    def snapshot():
-        return sorted((r["k"], r["v"]) for r in read_upsert_table(spark, tbl).collect())
-
-    # vacuum after the swap, before the replay: reads stay intact
-    vacuum_upsert_table(tbl)
-    assert snapshot() == want
-    # replay of the already-swapped batch after that vacuum: converges
-    sink(b1, 1)
-    assert snapshot() == want
-    # vacuum again after the replay; the replay's superseded dirs go,
-    # referenced ones stay, reads unchanged
-    vacuum_upsert_table(tbl)
-    assert snapshot() == want
-    refs = set(json.load(open(os.path.join(tbl, "_manifest.json")))["buckets"].values())
-    assert set(os.listdir(os.path.join(tbl, "data"))) == refs
-    # one more replay cycle on a vacuumed table still converges
-    sink(b1, 1)
-    vacuum_upsert_table(tbl)
-    assert snapshot() == want
-
-
-def test_upsert_read_before_any_batch(spark, tmp_path):
-    """A table whose stream never committed (empty source + skip_empty)
-    has no manifest: read with a schema returns an empty DataFrame; read
-    without one raises a descriptive error naming the path and cause."""
-    import pytest
-
-    from kafkasparkstream_spark.streaming.sinks import (
-        foreach_batch_upsert_sink,
-        read_upsert_table,
-    )
-
-    tbl = str(tmp_path / "never_written")
-    # skip_empty: an all-empty stream leaves no manifest behind
-    sink = foreach_batch_upsert_sink(tbl, ("k",), num_buckets=2)
-    empty = spark.createDataFrame([], "k int, v string")
-    sink(empty, 0)
-
-    df = read_upsert_table(spark, tbl, schema="k int, v string")
-    assert df.count() == 0 and df.columns == ["k", "v"]
-    with pytest.raises(FileNotFoundError, match="no micro-batch has committed"):
-        read_upsert_table(spark, tbl)
+    assert out.agg(F.sum("reading_count")).first()[0] == n_events
 
 
 def test_clamped_shuffle_partitions_is_scale_aware(spark):
