@@ -11,15 +11,20 @@ every setting here is chosen to also hold on a large multi-executor cluster:
   host tz (the reference's producer used naive wall clock,
   data-generator/generator.py:47 — we pin UTC instead).
 - Arrow enabled for the Pandas-UDF slow paths (vectorized Python transfer).
-- Streaming checkpoints on ``file:`` paths go through Hadoop's raw local
-  ``FileContext`` (``RawLocalFs``), without the checksummed wrapper: that
-  wrapper writes a ``.crc`` companion for every checkpoint file, and
-  without Hadoop's native library every file created forks a ``chmod``.
+- With a ``local[...]`` master, Hadoop's ``file:`` classes are the ones in
+  ``jvm/nio-localfs.jar`` (:data:`LOCALFS_JAR`, put on the driver class
+  path). Without Hadoop's native library the stock ones fork a ``chmod``
+  for every file and directory created and two ``readlink``s for every
+  checkpoint rename; these set the same nine permission bits and read link
+  status through ``java.nio`` instead. Checkpoints (the ``FileContext``
+  API) go through the raw local file system, without the checksummed
+  wrapper that writes a ``.crc`` companion for every checkpoint file;
   Spark checksums its own checkpoint files
-  (``spark.sql.streaming.checkpoint.fileChecksum.enabled``, left on).
-  The ``FileSystem`` API keeps ``LocalFileSystem``: Spark's RocksDB state
-  store casts ``FileSystem.getLocal`` to it. Cluster storage (HDFS, object
-  stores) is untouched.
+  (``spark.sql.streaming.checkpoint.fileChecksum.enabled``, left on). The
+  ``FileSystem`` API stays a ``LocalFileSystem``: Spark's RocksDB state
+  store casts ``FileSystem.getLocal`` to it. Other masters keep the stock
+  classes, since their executors do not have the jar; cluster storage
+  (HDFS, object stores) is untouched either way.
 - The driver JVM starts with :data:`DRIVER_INITIAL_HEAP` committed, so a
   young session does not run G1's concurrent marking cycles just to grow a
   heap that starts at 1/64 of host RAM.
@@ -28,6 +33,7 @@ every setting here is chosen to also hold on a large multi-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -40,6 +46,14 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #: GC thread CPU in some 10 s windows and under 1 s in others. 2 GB removed
 #: the cycles (none in 28 runs); 1 GB still had them in 3 of 6.
 DRIVER_INITIAL_HEAP = "2g"
+
+#: Hadoop's local file system without a child process per file operation;
+#: ``scripts/build_localfs_jar.sh`` rebuilds it from the source beside it.
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-localfs.jar")
+LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "kafkasparkstream_spark.jvm.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "kafkasparkstream_spark.jvm.NioRawLocalFs",
+}
 
 
 def _mib(size: str) -> int:
@@ -125,39 +139,55 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "134217728")
     _disable_thp_if_requested()
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    initial_heap_mib = min(_mib(DRIVER_INITIAL_HEAP), _mib(driver_mem))
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.python.daemon.module", "kafkasparkstream_spark.pydaemon")
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_conf(master, shuffle_partitions, driver_mem, extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def session_conf(
+    master: str,
+    shuffle_partitions: int,
+    driver_mem: str,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The Spark settings :func:`get_spark` builds its session with.
+
+    ``extra_conf`` wins over every setting here, except that a
+    ``spark.driver.extraClassPath`` of its own is appended to
+    :data:`LOCALFS_JAR` rather than replacing it.
+    """
+    initial_heap_mib = min(_mib(DRIVER_INITIAL_HEAP), _mib(driver_mem))
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.python.daemon.module": "kafkasparkstream_spark.pydaemon",
         # Python workers are always co-resident with their executor; a unix
         # domain socket skips the TCP/loopback stack for every Arrow batch
         # (measured here: trivial 32-task mapInPandas round-trip 1.0 s →
         # 0.5 s; biggest on sandboxes with virtualized netstacks).
-        .config("spark.python.unix.domain.socket.enabled", "true")
+        "spark.python.unix.domain.socket.enabled": "true",
         # Driver-side hygiene for local mode; harmless on a cluster.
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_mem)
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": driver_mem,
         # Applied before any extraJavaOptions a caller passes.
-        .config("spark.driver.defaultJavaOptions", f"-Xms{initial_heap_mib}m")
-        .config(
-            "spark.hadoop.fs.AbstractFileSystem.file.impl",
-            "org.apache.hadoop.fs.local.RawLocalFs",
-        )
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+        "spark.driver.defaultJavaOptions": f"-Xms{initial_heap_mib}m",
+    }
+    if re.fullmatch(r"local(\[[^\]]*\])?", master):
+        conf.update(LOCALFS_CONF)
+        conf["spark.driver.extraClassPath"] = LOCALFS_JAR
+    for k, v in (extra_conf or {}).items():
+        if k == "spark.driver.extraClassPath" and k in conf:
+            v = f"{conf[k]}{os.pathsep}{v}"
+        conf[k] = v
+    return conf
 
 
 ROCKSDB_PROVIDER = (
